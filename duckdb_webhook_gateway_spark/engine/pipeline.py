@@ -155,7 +155,7 @@ class Gateway:
         spark = self.spark
         # The webhooks view IS the driver-held catalog list rendered as a
         # LocalTableScan — len() of the same rows, no job round.
-        webhook_count = len(self.store._catalog["webhooks"])
+        webhook_count = self.store.catalog_count("webhooks")
         raw_count = spark.table("raw_events").count()
         tr = spark.table("transformed_events")
         per_webhook = (

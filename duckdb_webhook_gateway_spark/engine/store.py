@@ -188,6 +188,12 @@ class TableStore:
         with self.lock:
             return [dict(r) for r in self._catalog[name]]
 
+    def catalog_count(self, name: str) -> int:
+        """Row count of a catalog table.  ``len`` of the list is atomic,
+        so this skips the lock a concurrent ``mutate_catalog`` holds
+        through its parquet persist."""
+        return len(self._catalog[name])
+
     def find_catalog_row(
         self, name: str, pred
     ) -> Optional[dict[str, Any]]:
@@ -213,33 +219,13 @@ class TableStore:
 
     # -- event tables (append-only, date-partitioned parquet) ------------
     def _register_event_view(self, name: str) -> None:
-        # A FRESH bucketed layout (see bucket_events) takes precedence:
-        # reads then satisfy ClusteredDistribution straight off the scan,
-        # so joins on the bucket key run with ZERO exchanges.  Any append
-        # since the last bucket_events makes the layout stale, and the
-        # view falls back to the plain date-partitioned parquet — always
-        # correct, just unbucketed until the next maintenance pass.
-        spec = self._load_bucket_spec(name)
-        if (
-            spec is not None
-            and spec.get("manifest") == self._event_manifest(name)
-            and self.spark.catalog.tableExists(spec["table"])
-        ):
-            df = self.spark.table(spec["table"]).select(
-                *[f.name for f in SCHEMAS[name].fields]
-            )
-            df.createOrReplaceTempView(name)
-            return
-        self._plain_event_df(name).createOrReplaceTempView(name)
-
-    def _plain_event_df(self, name: str) -> DataFrame:
         path = self._path(name)
         schema = SCHEMAS[name]
         if os.path.isdir(path) and any(
             f.endswith(".parquet") or f.startswith("event_date=")
             for f in os.listdir(path)
         ):
-            return (
+            df = (
                 self.spark.read.schema(
                     T.StructType(
                         list(schema.fields)
@@ -250,192 +236,9 @@ class TableStore:
                 .parquet(path)
                 .select(*[f.name for f in schema.fields])
             )
-        return self.spark.createDataFrame([], schema)
-
-    # -- bucketed event layout (write-time join co-location) -------------
-    def _bucket_spec_path(self, name: str) -> str:
-        return self._path(name) + ".__bucketspec.json"
-
-    def _bucket_table_name(self, name: str) -> str:
-        import hashlib
-
-        tag = hashlib.md5(
-            os.path.abspath(self.base_dir).encode()
-        ).hexdigest()[:10]
-        return f"store_{tag}_{name}_bucketed"
-
-    def _load_bucket_spec(self, name: str) -> Optional[dict[str, Any]]:
-        import json
-
-        p = self._bucket_spec_path(name)
-        if not os.path.isfile(p):
-            return None
-        try:
-            with open(p) as fh:
-                return json.load(fh)
-        except Exception:
-            return None
-
-    def _event_files(self, name: str) -> list[str]:
-        """Sorted relative paths of every parquet part file."""
-        base = self._path(name)
-        out: list[str] = []
-        if not os.path.isdir(base):
-            return out
-        for root, _dirs, files in os.walk(base):
-            for f in files:
-                if f.endswith(".parquet"):
-                    out.append(
-                        os.path.relpath(os.path.join(root, f), base)
-                    )
-        return sorted(out)
-
-    def _event_manifest(self, name: str) -> list[list]:
-        """``[relpath, size, mtime_ns]`` per part file, sorted — the
-        bucketed layout's freshness manifest.  File NAMES alone are not
-        enough: ``append_events`` with a ``file_key`` idempotently
-        overwrites ``part-<key>.parquet`` IN PLACE, so a retried
-        micro-batch landing after ``bucket_events`` snapshotted the
-        manifest changes file CONTENTS without changing the file list.
-        Size+mtime catches in-place rewrites (an overwrite always
-        refreshes mtime even when byte-identical — stale in the SAFE
-        direction: the view falls back to plain parquet)."""
-        base = self._path(name)
-        out: list[list] = []
-        for rel in self._event_files(name):
-            try:
-                st = os.stat(os.path.join(base, rel))
-            except OSError:
-                continue  # racing unlink: manifest simply won't match
-            out.append([rel, st.st_size, st.st_mtime_ns])
-        return out
-
-    def bucket_events(
-        self, name: str, key_col: str, num_buckets: int = 32
-    ) -> int:
-        """Maintain a BUCKETED layout of an event table on a declared
-        join key (MAINTENANCE-WINDOW operation, like compact_events).
-
-        Rewrites the table's current contents as a managed table
-        bucketed+sorted by ``key_col`` (``operators/joins.py::
-        write_bucketed``) and records a file manifest.  While the
-        manifest matches the on-disk part files, ``table(name)`` and the
-        registered view read the BUCKETED table — two event tables
-        bucketed on their join keys with the same bucket count join with
-        ZERO exchanges on either side (the q5-decomposition answer: the
-        fact-to-fact exchange is removable only by layout, so the store
-        co-locates at write time).  Any later append makes the layout
-        stale and reads fall back to the plain parquet view until the
-        next ``bucket_events`` — correctness never depends on layout
-        freshness.  The plain date-partitioned files remain the source
-        of truth; the bucketed table is a derived layout, like an index.
-
-        Concurrency: an append racing this rewrite is harmless in both
-        orders — a file landing before the manifest snapshot is covered
-        by the layout; one landing after (or between snapshot and write)
-        makes the manifest stale and reads fall back to plain parquet.
-        The worst case is a wasted rewrite, never a wrong read.
-
-        Lifetime: bucketing metadata lives in the Spark CATALOG, so the
-        layout serves reads for as long as the metastore does — the
-        whole session with the default in-memory catalog (a re-opened
-        TableStore in the same session keeps the routing), across
-        restarts with a persistent (Hive) metastore as on a real
-        cluster.  A fresh in-memory-catalog session simply falls back
-        to plain parquet until the next maintenance pass — stale-safe
-        by the same ``tableExists`` check that guards everything else.
-
-        Returns the number of part files the layout covers.
-        """
-        import json
-
-        if name not in _EVENT_TABLES:
-            raise ValueError(f"not an event table: {name}")
-        if key_col not in {f.name for f in SCHEMAS[name].fields}:
-            raise ValueError(f"{key_col!r} is not a column of {name}")
-        from ..operators.joins import write_bucketed
-
-        with self.lock:
-            manifest = self._event_manifest(name)
-            tbl = self._bucket_table_name(name)
-            write_bucketed(
-                self._plain_event_df(name),
-                tbl,
-                [key_col],
-                num_buckets,
-                [key_col],
-            )
-            spec = {
-                "table": tbl,
-                "key": key_col,
-                "num_buckets": num_buckets,
-                "manifest": manifest,
-                "rows": self._manifest_rows(name, manifest),
-            }
-            with open(self._bucket_spec_path(name), "w") as fh:
-                json.dump(spec, fh)
-            self._register_event_view(name)
-        return len(manifest)
-
-    def _manifest_rows(self, name: str, manifest: list[list]) -> int:
-        """Total rows across the manifest's part files, summed from
-        parquet FOOTERS (driver-side metadata reads, no Spark job —
-        same routing trick as the ranks/near-dup metadata devices)."""
-        import pyarrow.parquet as pq
-
-        base = self._path(name)
-        total = 0
-        for rel, _size, _mtime in manifest:
-            try:
-                total += pq.read_metadata(os.path.join(base, rel)).num_rows
-            except Exception:
-                pass  # unreadable footer: undercount — triggers EARLIER
-        return total
-
-    def maintain_bucketed_layout(
-        self,
-        name: str,
-        *,
-        max_stale_files: int = 16,
-        max_stale_rows_frac: float = 0.10,
-    ) -> bool:
-        """Re-bucket an event table's layout if appends since the last
-        ``bucket_events`` crossed a staleness threshold (the maintenance
-        POLICY over the manual mechanism).
-
-        Appends silently degrade reads to plain parquet (stale-safe) —
-        this is the trigger that restores the zero-exchange layout: when
-        ≥ ``max_stale_files`` part files are new/changed/removed versus
-        the manifest, OR the new/changed files carry ≥
-        ``max_stale_rows_frac`` of the bucketed row count, rerun
-        ``bucket_events`` with the spec's recorded key and bucket count.
-        Below threshold the (cheap: os.stat walk + parquet footers, no
-        Spark job) check is a no-op, so callers can invoke it from any
-        maintenance pass — ``compact_events`` does.  Returns True iff
-        the layout was rebuilt.
-        """
-        spec = self._load_bucket_spec(name)
-        if spec is None or "manifest" not in spec:
-            return False
-        current = self._event_manifest(name)
-        if current == spec["manifest"]:
-            return False
-        old = {rel: (size, mt) for rel, size, mt in spec["manifest"]}
-        cur = {rel: (size, mt) for rel, size, mt in current}
-        changed = [
-            [rel, *meta] for rel, meta in cur.items() if old.get(rel) != meta
-        ]
-        removed = len(set(old) - set(cur))
-        base_rows = max(int(spec.get("rows") or 0), 1)
-        stale_rows = self._manifest_rows(name, changed)
-        if (
-            len(changed) + removed >= max_stale_files
-            or removed  # compaction/replay rewrote history: always rebuild
-            or stale_rows / base_rows >= max_stale_rows_frac
-        ):
-            self.bucket_events(name, spec["key"], spec["num_buckets"])
-            return True
-        return False
+        else:
+            df = self.spark.createDataFrame([], schema)
+        df.createOrReplaceTempView(name)
 
     def append_events(
         self, name: str, rows: list[dict[str, Any]], file_key: str | None = None
@@ -595,68 +398,6 @@ class TableStore:
                     os.path.join(tdir, f"part-{file_key}-{i:05d}.parquet"),
                 )
         shutil.rmtree(staging, ignore_errors=True)
-
-    def compact_events(self, name: str, max_files_per_partition: int = 1) -> int:
-        """Compact an event table's date partitions (small-files problem).
-
-        MAINTENANCE-WINDOW operation: the rewrite unlinks the source part
-        files, which invalidates any still-unexecuted LAZY DataFrame over
-        this table (e.g. the frame ``Gateway.replay`` hands back) and any
-        concurrently executing scan — the store lock serializes mutators,
-        not readers.  File-level parquet has no snapshot isolation;
-        run compaction when no long-lived readers are outstanding (a
-        table format like Delta/Iceberg lifts this at cluster scale).
-
-        Per-event ingestion writes one small parquet file per append — the
-        classic streaming-sink pathology: at 10k events/day a month of
-        audit log is 300k files and every scan pays 300k opens.  This
-        rewrites each ``event_date=`` partition that exceeds
-        ``max_files_per_partition`` into a single file (read-concat-write
-        via pyarrow, then swap under the store lock).  Returns the number
-        of partitions compacted.
-
-        At cluster scale the same operation is a per-partition Spark job
-        (``coalesce(1)`` per date into a staging dir + atomic move); the
-        driver-side pyarrow path is right for the single-writer store
-        where a day of audit rows fits in memory by construction.
-        """
-        if name not in _EVENT_TABLES:
-            raise ValueError(f"not an event table: {name}")
-        import pyarrow.parquet as pq
-        import pyarrow as pa
-
-        base = self._path(name)
-        if not os.path.isdir(base):
-            return 0
-        compacted = 0
-        with self.lock:
-            for part in sorted(os.listdir(base)):
-                part_dir = os.path.join(base, part)
-                if not (part.startswith("event_date=") and os.path.isdir(part_dir)):
-                    continue
-                files = sorted(
-                    f for f in os.listdir(part_dir) if f.endswith(".parquet")
-                )
-                if len(files) <= max_files_per_partition:
-                    continue
-                tables = [
-                    pq.read_table(os.path.join(part_dir, f)) for f in files
-                ]
-                merged = pa.concat_tables(tables, promote_options="default")
-                new_file = os.path.join(
-                    part_dir, f"compacted-{uuid.uuid4().hex}.parquet"
-                )
-                pq.write_table(merged, new_file)
-                for f in files:
-                    os.unlink(os.path.join(part_dir, f))
-                compacted += 1
-            self._register_event_view(name)
-        if compacted:
-            # Compaction rewrote part files, so any bucketed layout just
-            # went stale; this maintenance window is the right time to
-            # restore it (outside the lock — bucket_events re-acquires).
-            self.maintain_bucketed_layout(name)
-        return compacted
 
     def table(self, name: str) -> DataFrame:
         return self.spark.table(name)

@@ -49,10 +49,3 @@ def hex_to_int_expr(hex_sql: str, n: int = 8, dialect: str = "spark") -> str:
 def md5_int_expr(col_sql: str, dialect: str = "spark", n: int = 8) -> str:
     """Integer hash of a string column: first ``n`` hex chars of md5."""
     return hex_to_int_expr(f"md5({col_sql})", n=n, dialect=dialect)
-
-
-def seeded_md5_expr(seed_sql: str, col_sql: str, dialect: str = "spark") -> str:
-    """Seeded hash family h_seed(x) = md5(seed || '|' || x) — the minhash
-    permutation family.  Hex strings compare lexicographically the same in
-    both engines, so MIN() over these is engine-portable."""
-    return f"md5(CAST({seed_sql} AS STRING) || '|' || {col_sql})" if dialect == "spark" else f"md5(CAST({seed_sql} AS VARCHAR) || '|' || {col_sql})"

@@ -88,90 +88,6 @@ _PAIR_EXPR = (
 )
 
 
-def jaccard_pairs(
-    sh: DataFrame,
-    threshold: float,
-    candidates: DataFrame | None = None,
-    max_shingle_df: int | None = None,
-) -> DataFrame:
-    """Pairwise n-gram Jaccard over a (doc_id, shingle) relation.
-
-    Inverted-index self-join: group by shingle, emit co-occurring pairs,
-    count intersections, then J = |A∩B| / (|A|+|B|-|A∩B|).  Jaccard is a
-    ratio of integers, so the double division is bit-identical across
-    engines — no rounding slack needed for the threshold.
-
-    ``candidates`` (optional, columns doc_a/doc_b) restricts the pair space
-    — the LSH path passes its bucket candidates here so the quadratic term
-    only touches near-duplicate clusters.
-
-    ``max_shingle_df`` (optional) drops shingles appearing in more than
-    that many documents BEFORE pairing — a shingle shared by k docs emits
-    k² candidate rows, so one stop-word run in a 100M-doc corpus would
-    otherwise dominate the join.  NOTE: this changes the Jaccard
-    denominator too (set sizes shrink); it is an approximation knob, off
-    by default so the exact path stays oracle-checkable.
-    """
-    if max_shingle_df is not None:
-        rare = (
-            sh.groupBy("shingle")
-            .agg(F.countDistinct("doc_id").alias("sdf"))
-            .filter(F.col("sdf") <= max_shingle_df)
-            .select("shingle")
-        )
-        sh = sh.join(rare, "shingle", "left_semi")
-    counts = sh.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n"))
-    a = sh.alias("a")
-    b = sh.alias("b")
-    if candidates is None:
-        # Exact mode: group the inverted index by shingle and explode doc
-        # pairs from each posting list — one shuffle of the postings
-        # instead of a two-sided self-join (measured ~40% faster at sf0.1,
-        # identical pair counts).  A posting list of k docs still emits
-        # k²/2 pairs; prune hot shingles via max_shingle_df at scale.
-        lists = (
-            sh.groupBy("shingle")
-            .agg(F.sort_array(F.collect_list("doc_id")).alias("ds"))
-            .filter(F.size("ds") > 1)
-        )
-        inter = (
-            lists.select(F.explode(F.expr(_PAIR_EXPR)).alias("p"))
-            .select("p.doc_a", "p.doc_b")
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("shared_shingles"))
-        )
-    else:
-        # LSH mode: the candidate set DRIVES the join — intersections are
-        # computed only for bucketed pairs, so the verify stage is
-        # O(|candidates| × shingles-per-doc), not O(corpus²).
-        inter = (
-            candidates.join(a, F.col("doc_a") == F.col("a.doc_id"))
-            .join(
-                b,
-                (F.col("doc_b") == F.col("b.doc_id"))
-                & (F.col("a.shingle") == F.col("b.shingle")),
-            )
-            .groupBy("doc_a", "doc_b")
-            .agg(F.count(F.lit(1)).alias("shared_shingles"))
-        )
-    ca = counts.alias("ca")
-    cb = counts.alias("cb")
-    return (
-        inter.join(ca, F.col("doc_a") == F.col("ca.doc_id"))
-        .join(cb, F.col("doc_b") == F.col("cb.doc_id"))
-        .withColumn(
-            "jaccard",
-            F.round(
-                F.col("shared_shingles").cast("double")
-                / (F.col("ca.n") + F.col("cb.n") - F.col("shared_shingles")),
-                6,
-            ),
-        )
-        .filter(F.col("jaccard") >= threshold)
-        .select("doc_a", "doc_b", "shared_shingles", "jaccard")
-    )
-
-
 # Jaccard from in-row columns: J = shared / (na + nb - shared), a ratio of
 # integers rounded at 1e-6 — bit-identical across engines.
 def _with_jaccard(inter: DataFrame, threshold: float) -> DataFrame:
@@ -278,56 +194,14 @@ def ngram_jaccard_dedup(
 # engines.  One md5 per shingle instead of one per (shingle, seed) — at
 # sf0.1 that's 1.5M hashes instead of 24M, and the seeded variants are
 # three integer ops each.
-MINHASH_AFFINE = "((s * 131071 + 65537) * base + s * 97531) % 2147483647"
-
-
-def minhash_signatures(sh: DataFrame, num_hashes: int = 16) -> DataFrame:
-    """(doc_id, s, h): per-seed affine minhash over md5-based base hashes."""
-    from ..functions.hashing import md5_int_expr
-
-    base = sh.withColumn("base", F.expr(md5_int_expr("shingle", "spark")))
-    return (
-        base.select(
-            "doc_id",
-            F.explode(F.sequence(F.lit(0), F.lit(num_hashes - 1))).alias("s"),
-            "base",
-        )
-        .withColumn("h", F.expr(MINHASH_AFFINE))
-        .groupBy("doc_id", "s")
-        .agg(F.min("h").alias("h"))
-    )
-
-
-def minhash_bands(mh: DataFrame, rows_per_band: int = 4) -> DataFrame:
-    """Band the signature: band_key = md5(h_i || ... ordered by seed)."""
-    return (
-        mh.withColumn("band_id", (F.col("s") / rows_per_band).cast("int"))
-        .groupBy("doc_id", "band_id")
-        .agg(
-            F.md5(
-                F.concat_ws(
-                    "|",
-                    F.transform(
-                        F.array_sort(F.collect_list(F.struct("s", "h"))),
-                        lambda x: x["h"].cast("string"),
-                    ),
-                )
-            ).alias("band_key")
-        )
-    )
-
-
 def minhash_bands_wide(
     sh: DataFrame, num_hashes: int = 16, rows_per_band: int = 4
 ) -> DataFrame:
-    """Signatures + banding in ONE aggregation, no seed explode.
-
-    The long-format path explodes |shingles|×num_hashes rows; this one
-    keeps one row per (doc, shingle) and computes ``num_hashes`` MIN
-    aggregates as columns, then stacks bands out of the wide row — same
-    (doc_id, band_id, band_key) output at 1/num_hashes the shuffle input.
-    (Superseded by ``minhash_bands_inrow`` when the shingle SET is already
-    nested per doc; kept for exploded inputs + the equivalence test.)
+    """Signatures + banding in ONE aggregation over exploded (doc_id,
+    shingle) rows: ``num_hashes`` MIN aggregates as columns, then bands
+    stacked out of the wide row.  The reference form that
+    ``minhash_bands_inrow`` (the production path, shingle SET nested per
+    doc) is tested equal to.
     """
     from ..functions.hashing import md5_int_expr
 
@@ -394,8 +268,6 @@ def minhash_bands_inrow(
         ],
     )
     return _stack_bands(mins, num_hashes, rows_per_band)
-
-
 
 
 def minhash_lsh_dedup(

@@ -1,9 +1,7 @@
-"""Join strategies for scale: broadcast, salted (skew-resistant), bucketed.
+"""Join strategies for scale: salted (skew-resistant), as-of, bloom semi-filters.
 
 These helpers make the 100 TB join patterns explicit and testable:
 
-- ``broadcast_join``: small-dimension joins must never shuffle the fact
-  side; this pins the broadcast hint rather than trusting size estimates.
 - ``salted_join``: a shuffle join on a skewed key puts an entire hot key
   in one task.  Salting splits each hot key into ``salt_factor`` subkeys:
   the large side gets a random-but-deterministic salt derived from a row
@@ -12,9 +10,7 @@ These helpers make the 100 TB join patterns explicit and testable:
   key's work is spread over ``salt_factor`` tasks.  (AQE skew-join
   handles many cases at runtime; explicit salting is the deterministic
   tool when one key dominates by orders of magnitude.)
-- ``write_bucketed`` / co-located reads: two tables bucketed by the same
-  key and bucket count join without any exchange — the physical plan for
-  repeated fact-to-fact joins over append-heavy tables.
+- ``asof_join_backward``: DuckDB's ``ASOF JOIN`` as one keyed window.
 """
 
 from __future__ import annotations
@@ -23,13 +19,6 @@ from typing import Sequence
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-
-def broadcast_join(
-    fact: DataFrame, dim: DataFrame, on, how: str = "inner"
-) -> DataFrame:
-    """Join with the dimension side pinned to broadcast."""
-    return fact.join(F.broadcast(dim), on, how)
 
 
 def salted_join(
@@ -67,25 +56,6 @@ def salted_join(
     )
     out = l_salted.join(s_salted, [key, "_salt"], how)
     return out.drop("_salt")
-
-
-def write_bucketed(
-    df: DataFrame,
-    table_name: str,
-    bucket_cols: Sequence[str],
-    num_buckets: int = 32,
-    sort_cols: Sequence[str] | None = None,
-) -> None:
-    """Persist as a bucketed managed table (co-located join input).
-
-    Joining two tables bucketed by the same key/count skips the exchange
-    on both sides — at 100 TB that is the difference between a join that
-    moves 200 TB over the network and one that moves nothing.
-    """
-    writer = df.write.mode("overwrite").bucketBy(num_buckets, *bucket_cols)
-    if sort_cols:
-        writer = writer.sortBy(*sort_cols)
-    writer.saveAsTable(table_name)
 
 
 def asof_join_backward(

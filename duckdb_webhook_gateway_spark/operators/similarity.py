@@ -635,14 +635,13 @@ def ivf_topk(
     Coarse quantizer: by default the first ``num_centroids`` corpus
     vectors (by id) act as centroids — deterministic, so the DuckDB
     oracle reproduces the exact same index (a differential-testing
-    device, not an index).  The PRODUCTION path passes
-    ``centroids=kmeans_fit(corpus, k=num_centroids)`` — trained lists
-    follow the data distribution, so the same ``nprobe`` budget covers
-    more of each query's true neighborhood (recall rises; pinned in
-    ``tests/test_approx_quality.py``).  Any (centroid_id, ``vec_col``)
-    relation works.  Each query probes its ``nprobe`` closest lists and
-    ranks only those lists' members: with C lists and balanced
-    assignment the scored candidate set is ~nprobe/C of the corpus.
+    device, not an index).  A production index passes trained
+    ``centroids`` — any (centroid_id, ``vec_col``) relation works; lists
+    that follow the data distribution let the same ``nprobe`` budget
+    cover more of each query's true neighborhood.  Each query probes its
+    ``nprobe`` closest lists and ranks only those lists' members: with C
+    lists and balanced assignment the scored candidate set is ~nprobe/C
+    of the corpus.
 
     Execution: queries and centroids are both broadcast (the query set is
     small by contract, like ``cosine_topk``); the probe map (query →
@@ -674,7 +673,7 @@ def ivf_topk(
         f"selects corpus rows with {id_col} < num_centroids "
         f"({num_centroids}) and requires corpus ids starting at 0 "
         "(the differential-oracle convention); on a sparse or offset "
-        "id space pass centroids=kmeans_fit(corpus, k) explicitly",
+        "id space pass centroids explicitly",
     )
     if isinstance(queries, pd.DataFrame):
         queries = queries.rename(columns={id_col: "query_id"})
@@ -891,8 +890,8 @@ def semantic_dedup(
 
     Centroids here are the ``num_clusters`` lowest-id vectors —
     deterministic, so the DuckDB oracle can replay the index exactly; at
-    production scale feed ``kmeans_fit`` centroids in instead (the plan
-    shape is identical).  The cluster assignment is what bounds the
+    production scale feed trained centroids in instead (the plan shape
+    is identical).  The cluster assignment is what bounds the
     otherwise-quadratic pair space: the dup scan self-joins keyed on
     ``centroid_id``, so each task scores one cluster's ~N/C vectors — the
     same candidates-within-buckets shape as MinHash-LSH and
@@ -952,130 +951,6 @@ def semantic_dedup(
     )
 
 
-# ---------------------------------------------------------------------------
-def kmeans_fit(
-    corpus: DataFrame,
-    k: int = 16,
-    iterations: int = 5,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-) -> DataFrame:
-    """Lloyd's k-means over an embedding column — the production path for
-    training the IVF coarse quantizer (``ivf_topk`` ships training-free
-    first-k centroids only so its DuckDB oracle can replay the index).
-
-    Deterministic setup: init = the k lowest-id corpus vectors; each
-    round assigns every vector to its nearest centroid by rounded cosine
-    (``ivf_assign``, ties on centroid id) and recomputes centroids as the
-    element-wise mean of their members.  Empty clusters keep their
-    previous centroid.  Float means still depend on partition summation
-    order in the last ulp, so this is an OPERATOR (tested for clustering
-    quality/invariants), not an oracle-paired query.
-
-    Scale notes (100 TB posture): per round, assignment is a broadcast
-    crossJoin + windowed argmax (linear, corpus never shuffles) and the
-    mean is posexplode → (centroid, dim)-keyed partial-agg — shuffle rows
-    = k×d partials per executor after map-side combine, independent of
-    corpus size.  Centroid relations are k rows and live driver-side
-    between rounds (k is small by contract, like ``ivf_topk``'s probe
-    map).
-
-    Returns (centroid_id, embedding, n_members) — n_members from the
-    final assignment.
-    """
-    v = corpus.select(F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v"))
-    # seed = the k LOWEST-id vectors (orderBy+limit, not filter(id < k):
-    # ids need not be dense 0-based — a sparse/offset id space would
-    # otherwise yield fewer than k seeds, silently degenerate)
-    centroids = (
-        corpus.orderBy(F.col(id_col))
-        .limit(k)
-        .select(F.col(id_col).alias("centroid_id"), F.col(vec_col).alias(vec_col))
-    )
-    renest = (
-        "transform(array_sort(collect_list(struct(pos, m))), x -> x.m)"
-    )
-    for _ in range(iterations):
-        assigned = ivf_assign(
-            v.withColumnRenamed("v", vec_col), centroids,
-            id_col="vec_id", vec_col=vec_col,
-        )
-        members = v.join(assigned, "vec_id")
-        means = (
-            members.select("centroid_id", F.posexplode("v"))
-            .groupBy("centroid_id", "pos")
-            .agg(F.avg("col").alias("m"))
-            .groupBy("centroid_id")
-            .agg(F.expr(renest).alias(vec_col))
-        )
-        # empty clusters keep their previous centroid
-        kept = centroids.join(means, "centroid_id", "left_anti")
-        centroids = means.unionByName(kept).localCheckpoint(eager=True)
-    final_assign = ivf_assign(
-        v.withColumnRenamed("v", vec_col), centroids,
-        id_col="vec_id", vec_col=vec_col,
-    )
-    sizes = final_assign.groupBy("centroid_id").agg(
-        F.count(F.lit(1)).alias("n_members")
-    )
-    return centroids.join(sizes, "centroid_id", "left").select(
-        "centroid_id",
-        vec_col,
-        F.coalesce("n_members", F.lit(0)).cast("bigint").alias("n_members"),
-    )
-
-
-# ---------------------------------------------------------------------------
-_Q8_MAX_EXPR = "array_max(transform({v}, y -> abs(CAST(y AS DOUBLE))))"
-# NB: the scale max is hoisted into its own projection (__mx) before this
-# runs — inlining it in the lambda would re-scan the array per ELEMENT
-# (higher-order lambdas are interpreted with no common-subexpression
-# elimination: O(d²) per vector)
-# try_divide: a ZERO vector has scale max 0 — its quantization is
-# undefined, and the all-NULL q vector propagates to a NULL sq/dot/score
-# that sorts after every real neighbor, exactly the oracle's x/0 -> NULL
-# path (ANSI divide would error the whole query instead).
-_Q8_EXPR = (
-    "transform({v}, x -> "
-    "CAST(round(try_divide(CAST(x AS DOUBLE) * 127.0, __mx)) AS BIGINT))"
-)
-
-
-def quantize_int8(
-    vectors: DataFrame, id_col: str = "vec_id", vec_col: str = "embedding"
-) -> DataFrame:
-    """Per-vector symmetric int8 quantization: q_i = round(x_i·127/max|x|).
-
-    The memory-bandwidth lever for embedding search at scale: int8 cuts
-    vector bytes 4× vs float32 (scan, shuffle, and cache all shrink with
-    it) and integer dot products are EXACT — no summation-order drift —
-    so quantized scores hash identically across engines.  Per-element
-    rounding of IEEE double expressions is deterministic too (unlike
-    float SUMs), which is what makes the q8 query oracle-pairable.
-
-    Returns (vec_id, q, sq): quantized bigint vector + its squared norm.
-    """
-    # three cascaded projections so each array expression evaluates ONCE
-    # per row: scale max -> quantized vector -> squared norm from the
-    # materialized q column (Catalyst keeps non-cheap multiply-referenced
-    # aliases in their own project instead of re-inlining them)
-    withm = vectors.select(
-        F.col(id_col).alias("vec_id"),
-        F.col(vec_col).alias("__v"),
-        F.expr(_Q8_MAX_EXPR.format(v=vec_col)).alias("__mx"),
-    )
-    qd = withm.select(
-        "vec_id", F.expr(_Q8_EXPR.format(v="__v")).alias("q")
-    )
-    return qd.select(
-        "vec_id",
-        "q",
-        F.expr(
-            "aggregate(q, CAST(0 AS BIGINT), (acc, v) -> acc + v * v)"
-        ).alias("sq"),
-    )
-
-
 def _round_half_away_np(x: "np.ndarray", decimals: int) -> "np.ndarray":
     """Element-wise HALF-AWAY-FROM-ZERO rounding (DuckDB ``round``'s
     mode), replacing ``np.round``'s banker's half-to-even in fused
@@ -1120,7 +995,7 @@ def quantized_topk(
 
     NULL contract (unchanged, oracle-paired): a zero-norm vector's
     quantization is undefined — every score it touches is SQL NULL
-    (``quantize_int8``'s try_divide degrade), NULLs sort last under the
+    (the oracle's x/0 -> NULL), NULLs sort last under the
     descending rank.  The fused pass reproduces this exactly via a
     masked nullable column, NOT the raise the probed-index family uses
     (those reject zero vectors loudly because a pruned search can't
@@ -1309,7 +1184,7 @@ def rerank_topk(
 
 def _q8_encode_np(mat: "np.ndarray") -> tuple["np.ndarray", "np.ndarray"]:
     """Symmetric int8 quantization of a (n, d) float64 matrix, matching
-    quantize_int8's expression semantics: q_i = round(x_i * 127 / max|x|)
+    the oracle's expression semantics: q_i = round(x_i * 127 / max|x|)
     with HALF-AWAY-FROM-ZERO rounding (Spark round / DuckDB round), NOT
     numpy's banker's round.  Returns (q int64 (n, d), sq int64 (n,)).
 
@@ -1331,7 +1206,7 @@ def _q8_encode_np_nullable(
 ) -> tuple["np.ndarray", "np.ndarray", "np.ndarray"]:
     """:func:`_q8_encode_np` with the DataFrame path's NULL contract
     instead of the fused families' raise: a zero-norm row gets
-    ``null_mask`` True (``quantize_int8``'s try_divide degrades it to an
+    ``null_mask`` True (the oracle's x/0 -> NULL degrades it to an
     all-NULL q vector, which propagates NULL through sq/dot/score — the
     semantics ``quantized_topk`` is oracle-paired under, and the EMB
     fuzz battery's zero-vector kind exercises on both engines).  The
@@ -1344,8 +1219,8 @@ def _q8_encode_np_nullable(
     mx = np.abs(mat).max(axis=1)
     null_mask = mx == 0
     safe = np.where(null_mask, 1.0, mx)
-    # (x * 127.0) / mx — the SAME association order as the declarative
-    # _Q8_EXPR and the DuckDB oracle's round((x*127.0)/mx); the previous
+    # (x * 127.0) / mx — the SAME association order as the DuckDB
+    # oracle's round((x*127.0)/mx); the previous
     # x * (127.0/mx) form computed a different intermediate that could
     # flip a quantization level within 1 ulp of a half-way point
     scaled = (mat * 127.0) / safe[:, None]
@@ -1382,8 +1257,8 @@ def ivfq8_topk(
 
     Differential-testing device, same as the siblings: the default
     centroids are the ``num_centroids`` lowest-id corpus vectors, so the
-    DuckDB oracle rebuilds the exact index; production passes
-    ``centroids=kmeans_fit(corpus, k)`` (plan shape identical).
+    DuckDB oracle rebuilds the exact index; production passes trained
+    ``centroids`` (plan shape identical).
     Input contract: zero-norm vectors are REJECTED loudly (the fused
     numpy path has no NULL to degrade to, and engines diverge
     structurally on NaN ordering — same class as ``finite_gate``).
@@ -1428,7 +1303,7 @@ def ivfq8_topk(
             f"selects corpus rows with {id_col} < num_centroids "
             f"({num_centroids}) and requires corpus ids starting at 0 "
             "(the differential-oracle convention); on a sparse or offset "
-            "id space pass centroids=kmeans_fit(corpus, k) explicitly"
+            "id space pass centroids explicitly"
         )
     c_ids = cent_pd["centroid_id"].to_numpy(dtype="int64")
     c_mat = np.stack(
@@ -1704,7 +1579,7 @@ def pq_train(
     """Per-subspace Lloyd's k-means — the production codebook path for
     :func:`pq_topk` (which ships training-free first-N codebooks only so
     its DuckDB oracle can replay the index; same split as
-    ``kmeans_fit``/``ivf_topk``).
+    ``ivf_topk``'s ``centroids``).
 
     Returns (code_id, ``vec_col``) where each row concatenates subspace
     codeword ``code_id`` across all subspaces — a drop-in for
@@ -1861,7 +1736,7 @@ def ivfpq_topk(
 
     Differential-testing device throughout: first-N centroids and
     first-N codebooks (both replayed exactly by the DuckDB oracle); at
-    production scale pass ``kmeans_fit`` centroids / ``pq_train``
+    production scale pass trained centroids / ``pq_train``
     codebooks through ``ivf_topk``/``pq_topk``'s parameters — this
     composition keeps the defaults so the oracle stays declarative.
 
@@ -1874,7 +1749,7 @@ def ivfpq_topk(
     Var(v) + Var(c) EXCEEDS Var(v) and the quantizer sees a wider
     distribution.  Residuals pay off exactly when centroids genuinely
     compress (clustered production embeddings); there, subtract the
-    ``kmeans_fit`` centroid before ``pq_train`` and feed both in.
+    trained centroid before ``pq_train`` and feed both in.
 
     ONE Arrow pass over the partitioned corpus (centroids, queries,
     probe map, codebook and LUT all broadcast, each small by contract):
@@ -1906,7 +1781,7 @@ def ivfpq_topk(
             f"{id_col} < num_centroids ({num_centroids}) and found none — "
             "it requires corpus ids starting at 0 (the differential-oracle "
             "convention, same as ivf_topk's filter device); on a sparse or "
-            "offset id space pass kmeans_fit centroids through "
+            "offset id space pass trained centroids through "
             "ivf_topk/pq_topk explicitly"
         )
     c_ids = cents["_id"].to_numpy(dtype="int64")
@@ -2046,35 +1921,6 @@ def finite_gate(
         F.col(id_col).alias("vec_id"),
         F.expr(nonfinite).cast("int").alias("n_nonfinite"),
     ).withColumn("is_clean", F.col("n_nonfinite") == 0)
-
-
-def lsh_suggest_planes(
-    n_rows: int, target_bucket_members: int = 8192
-) -> int:
-    """Planes-per-table sizing rule for :func:`lsh_buckets` /
-    :func:`near_dup_pairs_lsh`: enough sign bits that an AVERAGE bucket
-    holds ~``target_bucket_members`` vectors (buckets per table = 2^p,
-    so p = ceil(log2(N / target)), floored at the 4-bit default the
-    differential oracle replays).  The block-split guard in
-    ``near_dup_pairs_lsh`` makes under-sizing survivable (bounded task
-    memory at any corpus size); this rule is what makes it FAST —
-    in-bucket work is quadratic in bucket size, so callers should
-    re-derive p as the corpus grows rather than lean on the guard:
-
-        p = lsh_suggest_planes(corpus_rows)
-        near_dup_pairs_lsh(vectors, planes_per_table=p, ...)
-
-    At 1B rows and the default target this yields p = 17 (~131k buckets
-    per table, ~7.6k expected members each) — each bucket's matmul fits
-    one task comfortably and recall is re-tuned via num_tables.
-    """
-    if n_rows < 1:
-        raise ValueError("n_rows must be >= 1")
-    import math
-
-    return max(
-        4, math.ceil(math.log2(max(1.0, n_rows / target_bucket_members)))
-    )
 
 
 def mmr_topk(
@@ -2428,8 +2274,7 @@ def ivf_layout_write(
     Spark's partition pruning skips (1 - nprobe/C) of the BYTES before
     a single task launches, instead of scanning everything and
     discarding in compute (what :func:`ivf_topk` must do over an
-    unorganized table).  The same trade as ``TableStore.bucket_events``
-    made for the audit join: pay one organized write, read forever.
+    unorganized table): pay one organized write, read forever.
 
     ``files_per_list`` bounds the FILE COUNT per list directory: the
     default (None) writes straight out of the assignment pass — zero
@@ -2440,7 +2285,7 @@ def ivf_layout_write(
     task count).  With ``files_per_list=F`` the assigned rows take ONE
     clustering shuffle on (list_id, hash(vec_id) % F) before the write
     — exactly F balanced files per non-empty list, the organized
-    write's one-time cost in the bucket_events tradition.  (AT MOST F:
+    write's one-time cost.  (AT MOST F:
     hash partitioning may co-locate two slots of one list in a task,
     which merges them into one larger file — never splits one.)
 
@@ -2609,110 +2454,3 @@ def ivf_pruned_topk(
         score, "query_id bigint, neighbor_id bigint, cosine double"
     )
     return _topk_by_cosine(cand, k)
-
-
-def ivf_layout_append(
-    new_vectors: DataFrame,
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    files_per_list: int | None = None,
-) -> None:
-    """Incremental maintenance of an :func:`ivf_layout_write` layout:
-    assign the new batch with the layout's OWN stored quantizer (the
-    ``_quantizer`` directory the writer persisted — appenders never
-    supply centroids, so the index can't silently fork) and append the
-    rows into their list partitions.
-
-    This is the ingest half of the 100 TB index story, the same model
-    as ``TableStore.bucket_events``: the organized layout stays
-    queryable and PRUNABLE through appends — an appended vector lands
-    in the list the probe map will look in, so :func:`ivf_pruned_topk`
-    over the appended layout equals :func:`ivf_topk` over the unioned
-    corpus bit-for-bit (pinned in tests).  No re-clustering happens
-    here by design: centroids drift only when the owner rebuilds
-    (``ivf_layout_write`` again), exactly like a FAISS IVF index under
-    ``add()``.
-
-    ``files_per_list`` is the writer's small-files control applied to
-    the append batch (at most F new files per touched list, one
-    clustering shuffle); appends still ACCUMULATE files over time, so a
-    high-churn layout periodically rebuilds via ``ivf_layout_write`` —
-    the compact-then-serve rhythm of ``TableStore.bucket_events``.
-    """
-    spark = new_vectors.sparkSession
-    cents = spark.read.parquet(path + "/_quantizer")
-    c_ids, c_mat, c_norm = _collect_vec_block(
-        cents,
-        "centroid_id",
-        [f for f in cents.columns if f != "centroid_id"][0],
-        f"ivf_layout_append: no quantizer found under {path}/_quantizer "
-        "— was this layout written by ivf_layout_write?",
-    )
-    bc = spark.sparkContext.broadcast((c_ids, c_mat, c_norm))
-
-    def assign(batches):
-        b_cids, b_cmat, b_cnorm = bc.value
-        for pdf in batches:
-            if len(pdf) == 0:
-                continue
-            a = np.stack(pdf["v"].values).astype("float64")
-            a_norm = np.linalg.norm(a, axis=1)
-            yield pd.DataFrame(
-                {
-                    "vec_id": pdf["vec_id"].to_numpy(dtype="int64"),
-                    "v": pdf["v"],
-                    "list_id": _ivf_assign(
-                        a, a_norm, b_cids, b_cmat, b_cnorm
-                    ),
-                }
-            )
-
-    src = new_vectors.select(
-        F.col(id_col).alias("vec_id"), F.col(vec_col).alias("v")
-    )
-    # The appended batch MUST land with the layout's stored vector type:
-    # appending array<double> rows into an array<float> layout would
-    # leave a mixed-schema parquet directory that later reads fail on or
-    # silently widen.  Same single-source-of-truth rule as the quantizer
-    # — the layout, not the caller, owns the physical contract.
-    from pyspark.sql.types import ArrayType
-
-    from pyspark.errors import AnalysisException
-
-    try:
-        layout_type = spark.read.parquet(path).schema["v"].dataType
-    except AnalysisException as ex:
-        # ONLY the empty-layout case falls back (quantizer stored, no
-        # list attracted a vector yet — nothing to infer from; the
-        # first append defines the physical vector type).  Any other
-        # read failure (conflicting partition structure, corrupt
-        # footer) stays loud: substituting the batch's own type there
-        # would vacuously pass the check and append into an already-
-        # inconsistent directory.
-        if "UNABLE_TO_INFER_SCHEMA" not in str(ex):
-            raise
-        layout_type = src.schema["v"].dataType
-    batch_type = src.schema["v"].dataType
-    if batch_type != layout_type:
-        if not (
-            isinstance(batch_type, ArrayType)
-            and isinstance(layout_type, ArrayType)
-        ):
-            raise ValueError(
-                f"ivf_layout_append: batch {vec_col!r} type "
-                f"{batch_type.simpleString()} cannot be stored in a "
-                f"layout with vector type {layout_type.simpleString()}"
-            )
-        src = src.select(
-            "vec_id", F.col("v").cast(layout_type).alias("v")
-        )
-    vec_type = layout_type.simpleString()
-    assigned = src.mapInPandas(
-        assign, f"vec_id bigint, v {vec_type}, list_id bigint"
-    )
-    if files_per_list is not None:
-        assigned = _bound_files_per_list(
-            assigned, len(c_ids), files_per_list, "ivf_layout_append"
-        )
-    assigned.write.mode("append").partitionBy("list_id").parquet(path)

@@ -36,36 +36,6 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 
-def mg_update(counters: dict, items, k: int) -> dict:
-    """One ROW-AT-A-TIME Misra-Gries pass over ``items`` into
-    ``counters`` (<= k keys) — the streaming state twin's rule
-    (streaming/stateful.py::_hh_group), where the contract is the
-    bounded 2k-scalar state per group: increment a tracked item, insert
-    while capacity remains, else decrement-all-and-drop-zeros.
-
-    The BATCH operators below use :func:`mg_update_batch` instead
-    (round 13): the per-token Python loop was the measured hot spot of
-    ``token_heavy_hitters`` (~1.35 s of 3.19 s at sf1 for 2.76 M
-    tokens), and the mergeable-summary variant does the same work at
-    C speed.  Both rules satisfy the identical SUPERSET contract the
-    recount + integer threshold depend on, so batch and streaming
-    outputs agree even though their intermediate candidate sets may
-    differ (candidate sets were never contractual — they already vary
-    with partitioning).
-    """
-    for item in items:
-        c = counters.get(item)
-        if c is not None:
-            counters[item] = c + 1
-        elif len(counters) < k:
-            counters[item] = 1
-        else:
-            # decrement-all; drop zeros (amortized O(1) per row: each
-            # decrement pays back one earlier increment)
-            counters = {t: c - 1 for t, c in counters.items() if c > 1}
-    return counters
-
-
 def mg_update_batch(counters: dict, values, k: int) -> dict:
     """Vectorized Misra-Gries batch merge (the mergeable-summaries
     construction, Agarwal et al. 2012): add the batch's EXACT value
@@ -87,12 +57,12 @@ def mg_update_batch(counters: dict, values, k: int) -> dict:
     vc = s.value_counts()
     for item, c in vc.items():
         counters[item] = counters.get(item, 0) + int(c)
-    # value_counts drops missing values by default; the row-at-a-time
-    # rule tracked them as counter keys, and the superset contract must
-    # hold for a null item too (heavy_hitters' semi-join recount can
-    # never OUTPUT a null key, but misra_gries_candidates' documented
-    # superset is a library contract of its own) — fold them back under
-    # the canonical None key
+    # value_counts drops missing values by default; the classic
+    # row-at-a-time rule tracks them as counter keys, and the superset
+    # contract must hold for a null item too (heavy_hitters' semi-join
+    # recount can never OUTPUT a null key, but misra_gries_candidates'
+    # documented superset is a library contract of its own) — fold them
+    # back under the canonical None key
     null_n = int(s.isna().sum())
     if null_n:
         counters[None] = counters.get(None, 0) + null_n

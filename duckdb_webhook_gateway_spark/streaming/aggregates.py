@@ -1,15 +1,13 @@
-"""Event-time streaming aggregation over the webhook stream.
+"""Stream/batch equivalence bridges: Structured Streaming replays of
+batch relations.
 
 The reference has no streaming semantics — "analytics" is ad-hoc SQL over
 the accumulated audit tables (SURVEY §2B "Streaming-only semantics").
-This module is the Spark-native extension the reference cannot express:
-tumbling event-time windows with a watermark for late data, computed
-incrementally over the same landing-dir envelopes the micro-batch
-pipeline consumes.
-
-State stays bounded: the watermark lets Spark drop window state older
-than ``watermark`` behind the max observed event time — the difference
-between a stream job that runs for a year and one that OOMs in a week.
+Each bridge here lands a batch events relation as JSON files, drains it
+through a file-source stream under ``availableNow`` and returns the
+result, so a registered query can check a streaming operator (tumbling
+windows, session windows, the dedup state store) against a DuckDB
+oracle.
 """
 
 from __future__ import annotations
@@ -18,65 +16,6 @@ from typing import Optional
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-
-from .webhook_source import ENVELOPE_SCHEMA
-
-
-def windowed_event_counts(
-    spark: SparkSession,
-    landing_dir: str,
-    window_duration: str = "1 minute",
-    watermark: str = "5 minutes",
-) -> DataFrame:
-    """Streaming DataFrame: events per (window, source_path).
-
-    Wire to any sink; e.g.::
-
-        q = (windowed_event_counts(spark, sg.landing_dir)
-             .writeStream.outputMode("complete")
-             .format("memory").queryName("event_counts")
-             .trigger(availableNow=True).start())
-    """
-    stream = (
-        spark.readStream.schema(ENVELOPE_SCHEMA)
-        .json(landing_dir)
-        .withWatermark("ingest_ts", watermark)
-    )
-    return (
-        stream.groupBy(
-            F.window("ingest_ts", window_duration).alias("win"),
-            "source_path",
-        )
-        .agg(F.count(F.lit(1)).alias("n_events"))
-        .select(
-            F.col("win.start").alias("window_start"),
-            F.col("win.end").alias("window_end"),
-            "source_path",
-            "n_events",
-        )
-    )
-
-
-def run_windowed_counts_once(
-    spark: SparkSession,
-    landing_dir: str,
-    window_duration: str = "1 minute",
-    watermark: str = "5 minutes",
-    query_name: str = "event_counts",
-) -> list:
-    """Drain the landing dir once and return the windowed counts."""
-    df = windowed_event_counts(spark, landing_dir, window_duration, watermark)
-    q = (
-        df.writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
-    rows = spark.table(query_name).collect()
-    q.stop()
-    return rows
 
 
 def replay_hourly_counts(
@@ -93,9 +32,7 @@ def replay_hourly_counts(
     DuckDB's naive timestamps) and aggregates with ``F.window`` under
     ``availableNow``, so the run drains everything and terminates.  No
     watermark: Spark requires LTZ event time for watermarks, and this
-    bounded replay in complete mode retracts nothing — the unbounded
-    production path (``windowed_event_counts``) keeps its LTZ
-    ``ingest_ts`` watermark for state bounds.
+    bounded replay in complete mode retracts nothing.
     """
     import tempfile
     import uuid
@@ -239,8 +176,7 @@ def replay_dedup_daily_users(
     day) distinct-user counts — the third stream/batch equivalence
     bridge (``replay_hourly_counts``: stateless tumbling windows;
     ``replay_user_sessions``: the session-merge state machine; this
-    one: the built-in dedup state operator, distinct from the custom
-    ``applyInPandasWithState`` dedup in ``streaming/stateful.py``).
+    one: the built-in dedup state operator).
 
     Design for determinism: ``dropDuplicates`` keeps an ARBITRARY first
     row per key (whichever micro-batch partition wins), so no test may
@@ -252,9 +188,9 @@ def replay_dedup_daily_users(
     stateful operators (dedup + streaming agg needs watermarks on both;
     a bounded availableNow replay has nothing to bound).
 
-    State posture: an unbounded production stream would use
-    ``dedup_within_watermark_stream`` (stateful.py) to cap state; the
-    bounded replay drains and frees it at termination.  Day derivation
+    State posture: an unbounded stream would need
+    ``dropDuplicatesWithinWatermark`` to cap state; the bounded replay
+    drains and frees it at termination.  Day derivation
     happens STREAM-SIDE from the NTZ event time (millisecond JSON
     round-trip truncation is harmless at day granularity — the
     sessions-bridge microsecond caveat does not bite here).

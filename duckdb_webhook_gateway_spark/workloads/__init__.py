@@ -103,6 +103,12 @@ _REGISTERED_ROUND = {
 # IN THE SAME COMMIT as the plan change; tests/test_rotation.py
 # validates names and rounds, and the window invariant then forces the
 # re-certification through the next driver run.
+#
+# No r15 entry: r15 changed only ranks.py's bracket route (fused
+# verify+pick, footer-scaled percentile_approx accuracy), and that
+# route does not run at certification scale — orders at sf0.1 is
+# 2.6 MB, under ranks.SMALL_INPUT_CEILING (16 MB), so the rank queries
+# take the plain window there and no certified plan changed.
 _PLAN_CHANGED_ROUND = {
     # r14: tiny literal relations (rank-pick broadcast sides, quantile
     # label tables, source-pair tables, PQ codebooks, the IVF layout's

@@ -42,44 +42,6 @@ def test_ivf_recall_vs_bruteforce(spark):
     assert recall >= 0.4, f"IVF recall@3 {recall:.2f} vs brute force"
 
 
-def test_ivf_trained_centroids_raise_recall(spark):
-    """Wiring kmeans_fit into ivf_topk (centroids=) is the production
-    path: trained lists follow the data distribution, so the same nprobe
-    budget must recover at least as much of the brute-force top-k as the
-    first-N differential-testing centroids — and clear a floor the
-    first-N quantizer is not held to."""
-    from duckdb_webhook_gateway_spark.operators import similarity as S
-
-    d = sf_dir("sf0.01")
-    emb = spark.read.parquet(d + "/embeddings.parquet")
-    queries = emb.filter("vec_id < 10")
-    exact = {
-        (r.query_id, r.neighbor_id)
-        for r in datapipe.ann_cosine_topk(spark, d).collect()
-        if r.rank <= 3
-    }
-
-    def recall(cent):
-        got = {
-            (r.query_id, r.neighbor_id)
-            for r in S.ivf_topk(
-                queries, emb, num_centroids=16, nprobe=2, k=3,
-                centroids=cent,
-            ).collect()
-        }
-        return len(exact & got) / len(exact)
-
-    r_first = recall(None)  # first-16 centroids (oracle device)
-    trained = S.kmeans_fit(emb, k=16, iterations=5).select(
-        "centroid_id", "embedding"
-    )
-    r_trained = recall(trained)
-    assert r_trained >= r_first, (
-        f"trained recall {r_trained:.2f} < first-N {r_first:.2f}"
-    )
-    assert r_trained >= 0.5, f"trained IVF recall@3 {r_trained:.2f}"
-
-
 def test_lsh_buckets_group_near_dups(spark):
     d = sf_dir("sf0.01")
     near = datapipe.embedding_near_dup(spark, d).collect()
@@ -162,50 +124,6 @@ def test_near_dup_auto_routes_to_lsh(spark):
     exact_pairs = {(r.vec_a, r.vec_b) for r in exact.collect()}
     routed_pairs = {(r.vec_a, r.vec_b) for r in routed.collect()}
     assert routed_pairs <= exact_pairs
-
-
-def test_kmeans_fit_invariants_and_improvement(spark):
-    """Lloyd's k-means: k centroids survive, every member is counted, and
-    mean intra-cluster cosine must beat the training-free first-k init."""
-    import numpy as np
-
-    from duckdb_webhook_gateway_spark.operators.similarity import (
-        ivf_assign,
-        kmeans_fit,
-    )
-
-    emb = spark.read.parquet(sf_dir() + "/embeddings.parquet")
-    n = emb.count()
-    fitted = kmeans_fit(emb, k=8, iterations=3)
-    rows = fitted.collect()
-    assert len(rows) == 8
-    assert sum(r.n_members for r in rows) == n
-    assert all(len(r.embedding) == 64 for r in rows)
-
-    def mean_member_cosine(centroids_df):
-        assigned = ivf_assign(emb, centroids_df)
-        joined = (
-            emb.join(assigned, "vec_id")
-            .join(
-                centroids_df.withColumnRenamed("embedding", "cv"),
-                "centroid_id",
-            )
-            .select("embedding", "cv")
-            .collect()
-        )
-        sims = []
-        for r in joined:
-            a = np.asarray(r.embedding, dtype="float64")
-            b = np.asarray(r.cv, dtype="float64")
-            sims.append(a @ b / (np.linalg.norm(a) * np.linalg.norm(b)))
-        return float(np.mean(sims))
-
-    init = emb.filter(emb.vec_id < 8).select(
-        emb.vec_id.alias("centroid_id"), "embedding"
-    )
-    before = mean_member_cosine(init)
-    after = mean_member_cosine(fitted.select("centroid_id", "embedding"))
-    assert after > before, f"k-means did not tighten clusters: {before:.4f} -> {after:.4f}"
 
 
 def test_q8_recall_vs_float(spark):
@@ -479,21 +397,6 @@ def test_ivfpq_consistent_with_components(spark):
         )
     for r in got:
         assert assigned[r.neighbor_id] in probes[r.query_id], r
-
-
-def test_lsh_suggest_planes_sizing_rule():
-    """The plane-count rule: average bucket ~= target at every scale,
-    never below the oracle-replayable 4-bit default."""
-    from duckdb_webhook_gateway_spark.operators.similarity import (
-        lsh_suggest_planes,
-    )
-
-    assert lsh_suggest_planes(2_000) == 4            # default floor
-    assert lsh_suggest_planes(1_000_000, 8192) == 7  # ~7.8k per bucket
-    p = lsh_suggest_planes(1_000_000_000, 8192)
-    assert p == 17
-    assert 1_000_000_000 / (1 << p) <= 8192          # avg bucket <= target
-    assert 1_000_000_000 / (1 << (p - 1)) > 8192     # and p is minimal
 
 
 def test_ivf_family_rejects_offset_id_space(spark):

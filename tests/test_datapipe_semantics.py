@@ -175,48 +175,6 @@ def test_table_profile_counts_nulls_and_distincts(spark):
     assert "HashAggregate" in plan
 
 
-def test_training_shards_deterministic_and_complete(spark, tmp_path):
-    """Every doc lands in exactly one shard, assignment is identical
-    across runs/partitionings, shard dirs are hive-partitioned, and the
-    manifest totals match the input."""
-    import glob
-
-    from pyspark.sql import functions as F
-
-    from duckdb_webhook_gateway_spark.operators.shards import (
-        with_shard,
-        write_training_shards,
-    )
-
-    docs = spark.range(0, 500).select(
-        F.col("id").alias("doc_id"),
-        F.concat(F.lit("text "), F.col("id")).alias("text"),
-        (F.col("id") % 7 + 1).alias("n_tokens"),
-    )
-    out = str(tmp_path / "shards")
-    manifest = write_training_shards(
-        docs, out, n_shards=8, token_col="n_tokens"
-    ).collect()
-    assert [r.shard_id for r in manifest] == list(range(8))
-    assert sum(r.n_docs for r in manifest) == 500
-    assert sum(r.n_tokens for r in manifest) == sum(i % 7 + 1 for i in range(500))
-    assert len(glob.glob(out + "/shard_id=*")) == 8
-    # Hash sharding balances within ~3x at this size (no empty shards).
-    sizes = [r.n_docs for r in manifest]
-    assert min(sizes) > 0 and max(sizes) / min(sizes) < 3
-
-    # Re-derive assignment under a different partitioning: identical.
-    a = {r.doc_id: r.shard_id for r in with_shard(docs, 8).collect()}
-    b = {
-        r.doc_id: r.shard_id
-        for r in with_shard(docs.repartition(13), 8).collect()
-    }
-    assert a == b
-    back = spark.read.parquet(out)
-    c = {r.doc_id: r.shard_id for r in back.select("doc_id", "shard_id").collect()}
-    assert c == a
-
-
 def test_weighted_sample_biases_toward_heavy_docs(spark):
     """Selection probability must rise with weight: the sampled docs'
     mean weight exceeds the corpus mean (deterministic fixture, fixed
@@ -385,6 +343,26 @@ def test_asof_join_null_right_value_yields_null(spark):
     assert row["w"] == "b"   # and w comes from the SAME (ts=2) row
 
 
+def test_asof_join_backward_semantics(spark):
+    """Backward as-of: greatest right ts <= left ts per key; equal ts
+    matches; no earlier right row -> null."""
+    from duckdb_webhook_gateway_spark.operators.joins import asof_join_backward
+
+    left = spark.createDataFrame(
+        [(1, 100, "p1"), (1, 205, "p2"), (2, 50, "p3")],
+        ["k", "ts", "pid"],
+    )
+    right = spark.createDataFrame(
+        [(1, 100, "c1"), (1, 200, "c2"), (2, 60, "c3")],
+        ["k", "ts", "cid"],
+    )
+    out = {
+        r.pid: r.cid
+        for r in asof_join_backward(left, right, "k", "ts", ["cid"]).collect()
+    }
+    assert out == {"p1": "c1", "p2": "c2", "p3": None}
+
+
 def test_salted_join_rejects_outer_modes(spark):
     """r6 review fix: right/full outer would duplicate unmatched small
     rows per salt — rejected loudly instead of silently x8 wrong."""
@@ -395,25 +373,6 @@ def test_salted_join_rejects_outer_modes(spark):
     df = spark.range(4).withColumnRenamed("id", "k")
     with pytest.raises(ValueError, match="inner/left"):
         salted_join(df, df, "k", how="right")
-
-
-def test_bpe_encode_reports_empty_docs_as_zero(spark):
-    """r6 review fix: whitespace-only docs appear as (id, 0, 0) instead
-    of vanishing from the encode output."""
-    from duckdb_webhook_gateway_spark.operators.bpe import (
-        bpe_encode,
-        bpe_train,
-    )
-
-    docs = spark.createDataFrame(
-        [(1, "ab ab cd"), (2, ""), (3, " ")], ["doc_id", "text"]
-    )
-    merges = bpe_train(docs, num_merges=2)
-    out = {r["doc_id"]: r for r in bpe_encode(docs, merges).collect()}
-    assert set(out) == {1, 2, 3}
-    assert out[2]["n_words"] == 0 and out[2]["n_bpe_tokens"] == 0
-    assert out[3]["n_words"] == 0 and out[3]["n_bpe_tokens"] == 0
-    assert out[1]["n_words"] == 3
 
 
 def test_text_repetition_single_token_and_empty_docs(spark, tmp_path):

@@ -1,400 +1,9 @@
-"""Z-order layout: per-file footer stats must become 2-D-tight so box
-predicates skip most files — measured from real parquet footers."""
+"""IVF storage layout: the corpus partitioned by coarse list, its
+stored quantizer, and the per-list file-count bound."""
 
 from __future__ import annotations
 
-import glob
 import os
-
-import pyarrow.parquet as pq
-
-from conftest import sf_dir
-
-from duckdb_webhook_gateway_spark.operators.layout import (
-    morton_interleave,
-    write_zordered,
-)
-
-
-def _file_ranges(path, xcol, ycol):
-    out = []
-    for f in glob.glob(os.path.join(path, "*.parquet")):
-        md = pq.read_metadata(f)
-        schema_names = md.schema.to_arrow_schema().names
-        xi, yi = schema_names.index(xcol), schema_names.index(ycol)
-        xmn = min(md.row_group(g).column(xi).statistics.min for g in range(md.num_row_groups))
-        xmx = max(md.row_group(g).column(xi).statistics.max for g in range(md.num_row_groups))
-        ymn = min(md.row_group(g).column(yi).statistics.min for g in range(md.num_row_groups))
-        ymx = max(md.row_group(g).column(yi).statistics.max for g in range(md.num_row_groups))
-        out.append((xmn, xmx, ymn, ymx))
-    return out
-
-
-def _hits(ranges, box):
-    qx0, qx1, qy0, qy1 = box
-    return sum(
-        1
-        for xmn, xmx, ymn, ymx in ranges
-        if xmx >= qx0 and xmn <= qx1 and ymx >= qy0 and ymn <= qy1
-    )
-
-
-def test_zorder_write_skips_files_on_2d_box(spark, tmp_path):
-    li = spark.read.parquet(sf_dir() + "/lineitem.parquet").select(
-        "l_partkey", "l_suppkey", "l_quantity"
-    )
-    zpath = str(tmp_path / "z")
-    rpath = str(tmp_path / "r")
-    write_zordered(li, zpath, "l_partkey", "l_suppkey", n_files=16)
-    li.repartition(16).write.parquet(rpath)
-
-    # same row count round-trips
-    assert spark.read.parquet(zpath).count() == li.count()
-
-    stats = li.agg(
-        {"l_partkey": "min", "l_suppkey": "min"}
-    ).collect()  # just to force schema sanity
-    assert stats
-
-    import pyspark.sql.functions as F
-
-    b = li.agg(
-        F.min("l_partkey"), F.max("l_partkey"), F.min("l_suppkey"), F.max("l_suppkey")
-    ).collect()[0]
-    px = b[1] - b[0]
-    py = b[3] - b[2]
-    # a 10% x 10% box in the middle of the key space
-    box = (
-        b[0] + int(0.45 * px),
-        b[0] + int(0.55 * px),
-        b[2] + int(0.45 * py),
-        b[2] + int(0.55 * py),
-    )
-    z_hits = _hits(_file_ranges(zpath, "l_partkey", "l_suppkey"), box)
-    r_hits = _hits(_file_ranges(rpath, "l_partkey", "l_suppkey"), box)
-    # round-robin layout intersects (nearly) every file; z-order must
-    # intersect strictly fewer — the file-skipping payoff
-    assert r_hits >= 14
-    assert z_hits <= r_hits // 2, (z_hits, r_hits)
-
-
-def test_morton_interleave_known_bits(spark):
-    import pyspark.sql.functions as F
-
-    df = spark.range(1).select(
-        morton_interleave(F.lit(0b101), F.lit(0b011)).alias("z")
-    )
-    # x bits land on even positions, y bits on odd:
-    # x=101 -> 1<<0 | 0<<2 | 1<<4 ; y=011 -> 1<<1 | 1<<3 | 0<<5
-    assert df.collect()[0]["z"] == (1 | (1 << 4) | (1 << 1) | (1 << 3))
-
-
-def test_morton_locality_monotone_tiles(spark):
-    """Points in the same 2-D quadrant share high Morton bits — the
-    property that makes contiguous Z-ranges compact tiles."""
-    import pyspark.sql.functions as F
-
-    df = spark.createDataFrame(
-        [(x, y) for x in range(4) for y in range(4)], "x bigint, y bigint"
-    ).select(
-        "x", "y", morton_interleave(F.col("x") * 16384, F.col("y") * 16384).alias("z")
-    )
-    rows = {(r["x"], r["y"]): r["z"] for r in df.collect()}
-    # quadrant order: (0,0)-quadrant codes < (1,1)-quadrant codes
-    assert max(rows[(x, y)] for x in (0, 1) for y in (0, 1)) < min(
-        rows[(x, y)] for x in (2, 3) for y in (2, 3)
-    )
-
-
-def test_compact_parquet_merges_small_files(spark, tmp_path):
-    from duckdb_webhook_gateway_spark.operators.layout import compact_parquet
-
-    li = spark.read.parquet(sf_dir() + "/lineitem.parquet")
-    frag = str(tmp_path / "frag")
-    li.repartition(64).write.parquet(frag)  # 64 tiny files
-    assert len(glob.glob(frag + "/*.parquet")) == 64
-
-    dst = str(tmp_path / "compact")
-    total = sum(os.path.getsize(f) for f in glob.glob(frag + "/*.parquet"))
-    n = compact_parquet(spark, frag, dst, target_file_bytes=total // 3)
-    got = glob.glob(dst + "/*.parquet")
-    assert len(got) == n <= 5
-    assert spark.read.parquet(dst).count() == li.count()
-
-
-def test_compact_with_sort_recovers_clustering(spark, tmp_path):
-    from duckdb_webhook_gateway_spark.operators.layout import compact_parquet
-
-    li = spark.read.parquet(sf_dir() + "/lineitem.parquet").select(
-        "l_orderkey", "l_quantity"
-    )
-    frag = str(tmp_path / "frag")
-    li.repartition(32).write.parquet(frag)
-    dst = str(tmp_path / "sorted")
-    total = sum(os.path.getsize(f) for f in glob.glob(frag + "/*.parquet"))
-    compact_parquet(
-        spark, frag, dst, target_file_bytes=max(total // 4, 1), sort_col="l_orderkey"
-    )
-    # range-partitioned rewrite -> per-file key ranges must be disjoint
-    spans = []
-    for f in glob.glob(dst + "/*.parquet"):
-        md = pq.read_metadata(f)
-        names = md.schema.to_arrow_schema().names
-        i = names.index("l_orderkey")
-        mn = min(md.row_group(g).column(i).statistics.min for g in range(md.num_row_groups))
-        mx = max(md.row_group(g).column(i).statistics.max for g in range(md.num_row_groups))
-        spans.append((mn, mx))
-    spans.sort()
-    for (a0, a1), (b0, b1) in zip(spans, spans[1:]):
-        assert a1 <= b0, spans
-
-
-def _executed_plan(df) -> str:
-    return df._jdf.queryExecution().executedPlan().toString()
-
-
-def test_store_bucketed_event_join_exchange_free(spark, tmp_path):
-    """The productized bucketed layout (round 10): after
-    TableStore.bucket_events on both event tables' join keys, the
-    raw⋈transformed audit join (the recent-events feed spine) must run
-    with ZERO exchanges below the join — the write-time co-location
-    that removes the fact-to-fact shuffle the q5 decomposition proved
-    irreducible at query time.  A later append makes the layout stale:
-    reads fall back to plain parquet (correctness never depends on
-    layout freshness) until the next bucket_events re-freshens it."""
-    from datetime import datetime
-
-    from duckdb_webhook_gateway_spark.engine.store import TableStore
-
-    store = TableStore(spark, str(tmp_path / "store"))
-    ts = datetime(2026, 1, 5, 12, 0, 0)
-    raw = [
-        {"id": f"r{i}", "timestamp": ts, "source_path": "/t",
-         "payload": '{"a": 1}'}
-        for i in range(200)
-    ]
-    tr = [
-        {"id": f"t{i}", "raw_event_id": f"r{i}", "webhook_id": "w",
-         "timestamp": ts, "transformed_payload": "{}",
-         "destination_url": "http://x", "success": True,
-         "response_code": 200, "response_body": ""}
-        for i in range(150)
-    ]
-    store.append_events("raw_events", raw)
-    store.append_events("transformed_events", tr)
-
-    n_r = store.bucket_events("raw_events", "id", num_buckets=8)
-    n_t = store.bucket_events("transformed_events", "raw_event_id", 8)
-    assert n_r >= 1 and n_t >= 1
-
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        r = store.table("raw_events")
-        t = store.table("transformed_events")
-        joined = r.join(t, r.id == t.raw_event_id)
-        assert joined.count() == 150
-        plan = _executed_plan(joined)
-        assert "Exchange" not in plan, plan
-        assert "Bucketed: true" in plan
-
-        # staleness: an append flips reads back to plain parquet
-        store.append_events(
-            "raw_events",
-            [{"id": "r_late", "timestamp": ts, "source_path": "/t",
-              "payload": "{}"}],
-        )
-        r2 = store.table("raw_events")
-        assert r2.count() == 201          # new row visible immediately
-        t2 = store.table("transformed_events")
-        plan2 = _executed_plan(r2.join(t2, r2.id == t2.raw_event_id))
-        assert "Exchange" in plan2        # unbucketed fallback shape
-
-        # re-freshen: the maintenance pass restores the exchange-free join
-        store.bucket_events("raw_events", "id", num_buckets=8)
-        r3 = store.table("raw_events")
-        joined3 = r3.join(t2, r3.id == t2.raw_event_id)
-        assert joined3.count() == 150
-        assert "Exchange" not in _executed_plan(joined3)
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-
-
-def test_store_bucketed_layout_stale_on_inplace_keyed_overwrite(
-    spark, tmp_path
-):
-    """Freshness must be CONTENT-sensitive, not name-sensitive: a keyed
-    append idempotently overwrites part-<key>.parquet IN PLACE, so a
-    retried micro-batch landing after bucket_events snapshotted the
-    manifest changes file contents without changing the file list.  The
-    manifest records (size, mtime_ns) per file, so the overwrite makes
-    the layout stale and reads serve the NEW rows from plain parquet —
-    the 'any append makes the layout stale' invariant."""
-    from datetime import datetime
-
-    from duckdb_webhook_gateway_spark.engine.store import TableStore
-
-    store = TableStore(spark, str(tmp_path / "store"))
-    ts = datetime(2026, 1, 5, 12, 0, 0)
-    rows = [
-        {"id": f"r{i}", "timestamp": ts, "source_path": "/t",
-         "payload": '{"v": 1}'}
-        for i in range(3)
-    ]
-    store.append_events("raw_events", rows, file_key="batch-7")
-    store.bucket_events("raw_events", "id", 4)
-
-    # retried batch: same file_key, same file NAME, different contents
-    retry = [
-        {"id": f"r{i}", "timestamp": ts, "source_path": "/t",
-         "payload": '{"v": 2}'}
-        for i in range(5)
-    ]
-    store.append_events("raw_events", retry, file_key="batch-7")
-    got = store.table("raw_events")
-    assert got.count() == 5                      # post-retry rows served
-    assert {r["payload"] for r in got.collect()} == {'{"v": 2}'}
-    plan = _executed_plan(got)
-    assert "raw_events_bucketed" not in plan     # stale -> plain parquet
-
-
-def test_store_maintain_bucketed_layout_threshold(spark, tmp_path):
-    """The staleness POLICY: appends degrade reads to plain parquet;
-    maintain_bucketed_layout below threshold is a no-op, past the
-    file-count threshold it re-buckets with the spec's recorded key and
-    the audit join returns to zero exchanges."""
-    from datetime import datetime
-
-    from duckdb_webhook_gateway_spark.engine.store import TableStore
-
-    store = TableStore(spark, str(tmp_path / "store"))
-    ts = datetime(2026, 1, 5, 12, 0, 0)
-
-    def _append(i):
-        store.append_events(
-            "raw_events",
-            [{"id": f"r{i}", "timestamp": ts, "source_path": "/t",
-              "payload": "{}"}],
-        )
-
-    for i in range(10):
-        _append(i)
-    store.append_events(
-        "transformed_events",
-        [{"id": f"t{i}", "raw_event_id": f"r{i}", "webhook_id": "w",
-          "timestamp": ts, "transformed_payload": "{}",
-          "destination_url": "http://x", "success": True,
-          "response_code": 200, "response_body": ""} for i in range(10)],
-    )
-    store.bucket_events("raw_events", "id", 4)
-    store.bucket_events("transformed_events", "raw_event_id", 4)
-
-    # two appends: stale, but below the 3-file trigger -> no rebuild
-    _append(10)
-    _append(11)
-    assert store.maintain_bucketed_layout(
-        "raw_events", max_stale_files=3, max_stale_rows_frac=0.5
-    ) is False
-    r = store.table("raw_events")
-    assert "raw_events_bucketed" not in _executed_plan(r)  # degraded
-    assert r.count() == 12                                 # but correct
-
-    # a third append crosses the threshold -> rebuild restores layout
-    _append(12)
-    assert store.maintain_bucketed_layout(
-        "raw_events", max_stale_files=3, max_stale_rows_frac=0.5
-    ) is True
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        r2 = store.table("raw_events")
-        t2 = store.table("transformed_events")
-        joined = r2.join(t2, r2.id == t2.raw_event_id)
-        assert joined.count() == 10
-        plan = _executed_plan(joined)
-        assert "Exchange" not in plan, plan
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-
-    # row-fraction arm: one fat append past the rows threshold triggers
-    store.append_events(
-        "raw_events",
-        [{"id": f"x{i}", "timestamp": ts, "source_path": "/t",
-          "payload": "{}"} for i in range(13)],
-    )
-    assert store.maintain_bucketed_layout(
-        "raw_events", max_stale_files=100, max_stale_rows_frac=0.5
-    ) is True
-
-
-def test_store_compact_events_restores_bucketed_layout(spark, tmp_path):
-    """compact_events rewrites part files (layout necessarily stale) and
-    is a maintenance window — it must re-bucket before returning."""
-    from datetime import datetime
-
-    from duckdb_webhook_gateway_spark.engine.store import TableStore
-
-    store = TableStore(spark, str(tmp_path / "store"))
-    ts = datetime(2026, 1, 5, 12, 0, 0)
-    for i in range(6):
-        store.append_events(
-            "raw_events",
-            [{"id": f"r{i}", "timestamp": ts, "source_path": "/t",
-              "payload": "{}"}],
-        )
-    store.bucket_events("raw_events", "id", 4)
-    assert store.compact_events("raw_events") == 1
-    r = store.table("raw_events")
-    assert r.count() == 6
-    assert "raw_events_bucketed" in _executed_plan(r)
-
-
-def test_store_bucketed_layout_survives_store_reopen(spark, tmp_path):
-    """Bucketing metadata lives in the Spark catalog + the on-disk spec:
-    a RE-OPENED TableStore over the same directory (same session /
-    metastore) must keep routing reads through the bucketed table; and
-    a spec whose catalog table is gone (fresh in-memory catalog) must
-    fall back to plain parquet, never error."""
-    from datetime import datetime
-
-    from duckdb_webhook_gateway_spark.engine.store import TableStore
-
-    base = str(tmp_path / "store")
-    store = TableStore(spark, base)
-    ts = datetime(2026, 1, 5, 12, 0, 0)
-    store.append_events(
-        "raw_events",
-        [{"id": f"r{i}", "timestamp": ts, "source_path": "/t",
-          "payload": "{}"} for i in range(30)],
-    )
-    store.bucket_events("raw_events", "id", 4)
-
-    reopened = TableStore(spark, base)
-    plan = (
-        reopened.table("raw_events")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    # routing check by table identity: a bare scan legitimately drops
-    # the bucketed read (autoBucketedScan — nothing needs the
-    # distribution); the join test above pins "Bucketed: true" where
-    # an operator does need it
-    assert "raw_events_bucketed" in plan
-    assert reopened.table("raw_events").count() == 30
-
-    # simulate a fresh catalog: drop the managed table, keep the spec
-    spec = reopened._load_bucket_spec("raw_events")
-    spark.sql(f"DROP TABLE IF EXISTS {spec['table']}")
-    fresh = TableStore(spark, base)
-    plan2 = (
-        fresh.table("raw_events")
-        ._jdf.queryExecution()
-        .executedPlan()
-        .toString()
-    )
-    assert "raw_events_bucketed" not in plan2   # plain-parquet fallback
-    assert fresh.table("raw_events").count() == 30
 
 
 def test_ivf_layout_prunes_partitions_and_matches_unorganized_scan(
@@ -442,16 +51,12 @@ def test_ivf_layout_prunes_partitions_and_matches_unorganized_scan(
     assert len(inset.split(",")) < 16
 
 
-def test_ivf_layout_stored_quantizer_and_incremental_append(
+def test_ivf_layout_stored_quantizer_matches_explicit_centroids(
     spark, tmp_path
 ):
-    """The layout carries its own quantizer and stays correct under
-    appends: (1) ivf_pruned_topk with centroids=None resolves the
-    STORED quantizer and matches the explicit-centroids call
-    bit-for-bit; (2) after ivf_layout_append of a new batch, the pruned
-    query over the layout equals ivf_topk over the UNIONED corpus —
-    appended vectors land in the list the probe map will look in, the
-    bucket_events maintenance model applied to ANN."""
+    """The layout carries its own quantizer: ivf_pruned_topk with
+    centroids=None resolves the STORED quantizer and matches the
+    explicit-centroids call bit-for-bit."""
     import pyspark.sql.functions as F
 
     from conftest import sf_dir
@@ -459,12 +64,11 @@ def test_ivf_layout_stored_quantizer_and_incremental_append(
 
     emb = spark.read.parquet(sf_dir("sf0.01") + "/embeddings.parquet")
     base = emb.filter(F.col("vec_id") < 400)
-    extra = emb.filter(F.col("vec_id") >= 400)
     qs = emb.filter(F.col("vec_id") < 10)
     cents = emb.filter(F.col("vec_id") < 16).select(
         F.col("vec_id").alias("centroid_id"), "embedding"
     )
-    d = str(tmp_path / "ivf_layout_inc")
+    d = str(tmp_path / "ivf_layout_stored")
     S.ivf_layout_write(base, d, centroids=cents)
 
     explicit = sorted(
@@ -479,62 +83,6 @@ def test_ivf_layout_stored_quantizer_and_incremental_append(
         map(tuple, S.ivf_pruned_topk(spark, d, qs, nprobe=2, k=3).collect())
     )
     assert stored == explicit  # quantizer round-trip changes nothing
-
-    S.ivf_layout_append(extra, d)
-    after = sorted(
-        map(tuple, S.ivf_pruned_topk(spark, d, qs, nprobe=2, k=3).collect())
-    )
-    want = sorted(
-        map(
-            tuple,
-            S.ivf_topk(qs, emb, nprobe=2, k=3, centroids=cents).collect(),
-        )
-    )
-    assert after == want  # appended layout == unorganized union corpus
-    assert after != explicit  # ...and the append genuinely changed top-k
-
-
-def test_ivf_layout_append_enforces_stored_vector_type(spark, tmp_path):
-    """The layout owns its physical vector type: appending a batch with
-    a different ARRAY element type is cast to the stored type (no
-    mixed-schema parquet directory), and a non-array vector column is
-    rejected loudly (ADVICE r11)."""
-    import pytest
-
-    import pyspark.sql.functions as F
-
-    from conftest import sf_dir
-    from duckdb_webhook_gateway_spark.operators import similarity as S
-
-    emb = spark.read.parquet(sf_dir("sf0.001") + "/embeddings.parquet")
-    base = emb.filter(F.col("vec_id") < 40)
-    cents = emb.filter(F.col("vec_id") < 4).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
-    d = str(tmp_path / "ivf_layout_typed")
-    S.ivf_layout_write(base, d, centroids=cents)
-    stored = spark.read.parquet(d).schema["v"].dataType.simpleString()
-
-    # widened batch: array<double> appended into the stored type
-    widened = emb.filter(
-        (F.col("vec_id") >= 40) & (F.col("vec_id") < 50)
-    ).select(
-        "vec_id",
-        F.col("embedding").cast("array<double>").alias("embedding"),
-    )
-    S.ivf_layout_append(widened, d)
-    assert (
-        spark.read.parquet(d).schema["v"].dataType.simpleString() == stored
-    )
-    assert spark.read.parquet(d).count() == 50
-
-    # non-array vector column: loud reject, nothing written
-    bad = spark.range(100, 102).select(
-        F.col("id").alias("vec_id"), F.col("id").alias("embedding")
-    )
-    with pytest.raises(ValueError, match="cannot be stored"):
-        S.ivf_layout_append(bad, d)
-    assert spark.read.parquet(d).count() == 50
 
 
 def test_ivf_layout_write_files_per_list_bounds_file_count(
@@ -599,56 +147,6 @@ def test_ivf_layout_write_files_per_list_bounds_file_count(
         )
 
 
-def test_ivf_layout_append_files_per_list_bound(spark, tmp_path):
-    """The append-side small-files control: an appended batch spread
-    over many upstream tasks adds at most files_per_list new files per
-    touched list, and the appended layout still answers identically."""
-    import glob as _glob
-
-    import pyspark.sql.functions as F
-    import pytest
-
-    from conftest import sf_dir
-    from duckdb_webhook_gateway_spark.operators import similarity as S
-
-    emb = spark.read.parquet(sf_dir("sf0.01") + "/embeddings.parquet")
-    base = emb.filter(F.col("vec_id") < 300)
-    extra = emb.filter(
-        (F.col("vec_id") >= 300) & (F.col("vec_id") < 500)
-    ).repartition(16)
-    cents = emb.filter(F.col("vec_id") < 8).select(
-        F.col("vec_id").alias("centroid_id"), "embedding"
-    )
-    qs = emb.filter(F.col("vec_id") < 5)
-
-    d = str(tmp_path / "ivf_append_bounded")
-    S.ivf_layout_write(base, d, centroids=cents, files_per_list=1)
-    before = {
-        lst: len(_glob.glob(os.path.join(lst, "*.parquet")))
-        for lst in _glob.glob(os.path.join(d, "list_id=*"))
-    }
-    S.ivf_layout_append(extra, d, files_per_list=2)
-    after = {
-        lst: len(_glob.glob(os.path.join(lst, "*.parquet")))
-        for lst in _glob.glob(os.path.join(d, "list_id=*"))
-    }
-    assert all(
-        after[lst] - before.get(lst, 0) <= 2 for lst in after
-    ), (before, after)
-
-    got = sorted(map(tuple, S.ivf_pruned_topk(
-        spark, d, qs, nprobe=2, k=3, centroids=cents
-    ).collect()))
-    want = sorted(map(tuple, S.ivf_topk(
-        qs, emb.filter(F.col("vec_id") < 500), nprobe=2, k=3,
-        centroids=cents,
-    ).collect()))
-    assert got == want
-
-    with pytest.raises(ValueError, match="files_per_list"):
-        S.ivf_layout_append(extra, d, files_per_list=-1)
-
-
 def test_ivf_layout_write_empty_corpus_returns_no_lists(spark, tmp_path):
     """An empty corpus writes an empty layout (only _SUCCESS and the
     stored quantizer) — the list-id read-back must return [] instead of
@@ -668,14 +166,5 @@ def test_ivf_layout_write_empty_corpus_returns_no_lists(spark, tmp_path):
         emb.filter(F.col("vec_id") < 0), d, centroids=cents
     )
     assert present == []
-    # the quantizer is still stored — an append can populate the layout
-    S.ivf_layout_append(emb.filter(F.col("vec_id") < 40), d)
-    qs = emb.filter(F.col("vec_id") < 3)
-    got = sorted(map(tuple, S.ivf_pruned_topk(
-        spark, d, qs, nprobe=2, k=3, centroids=cents
-    ).collect()))
-    want = sorted(map(tuple, S.ivf_topk(
-        qs, emb.filter(F.col("vec_id") < 40), nprobe=2, k=3,
-        centroids=cents,
-    ).collect()))
-    assert got == want
+    # the quantizer is still stored with the empty layout
+    assert spark.read.parquet(d + "/_quantizer").count() == 4

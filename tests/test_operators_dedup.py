@@ -8,7 +8,6 @@ from duckdb_webhook_gateway_spark.operators.dedup import (
     build_band_store,
     exact_dedup,
     incremental_minhash_dedup,
-    jaccard_pairs,
     minhash_lsh_dedup,
     ngram_jaccard_dedup,
     shingles,
@@ -144,9 +143,12 @@ def test_ngram_jaccard_pruned_matches_exact_when_no_hot_shingles(spark):
 
 
 def test_max_shingle_df_prunes_hot_shingles(spark):
-    sh = shingles(_docs(spark))
-    exact = jaccard_pairs(sh, threshold=0.01).count()
-    pruned = jaccard_pairs(sh, threshold=0.01, max_shingle_df=1).count()
+    exact = ngram_jaccard_dedup(
+        _docs(spark), threshold=0.01, max_shingle_df=None
+    ).count()
+    pruned = ngram_jaccard_dedup(
+        _docs(spark), threshold=0.01, max_shingle_df=1
+    ).count()
     # df<=1 shingles can never co-occur -> no pairs at all
     assert pruned == 0
     assert exact > 0

@@ -90,31 +90,6 @@ def test_salted_join_matches_plain_join(spark):
     assert plain == salted
 
 
-def test_bucketed_join_no_exchange(spark, tmp_path):
-    from duckdb_webhook_gateway_spark.operators.joins import write_bucketed
-
-    orders = spark.read.parquet(sf_dir() + "/orders.parquet")
-    li = spark.read.parquet(sf_dir() + "/lineitem.parquet")
-    write_bucketed(orders, "b_orders", ["o_orderkey"], 8)
-    write_bucketed(li, "b_lineitem", ["l_orderkey"], 8)
-    joined = spark.table("b_lineitem").join(
-        spark.table("b_orders"),
-        spark.table("b_lineitem").l_orderkey == spark.table("b_orders").o_orderkey,
-    )
-    # Force a shuffle-join shape, then confirm bucketing removed exchanges.
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        plan = _plan(joined)
-        assert "SortMergeJoin" in plan
-        assert "Exchange hashpartitioning" not in plan
-    finally:
-        spark.conf.set(
-            "spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024)
-        )
-        spark.sql("DROP TABLE IF EXISTS b_orders")
-        spark.sql("DROP TABLE IF EXISTS b_lineitem")
-
-
 def test_audit_store_partition_pruning(spark, tmp_path):
     """A date-filtered scan of the audit store must prune partitions."""
     import datetime as dt
@@ -858,7 +833,6 @@ def test_gopher_repetition_single_arrow_pass(spark):
     assert len(scans) == 1, scans
 
 
-
 def test_bm25_skew_safe_df_checkpointed_tf(spark):
     """BM25 (round 10): df attaches with the skew-safe partial-agg +
     join-back over the lazily checkpointed tf relation — the previous
@@ -910,7 +884,6 @@ def test_ngram_novelty_skew_safe_partial_agg(spark):
                 if "Input" in nxt:
                     assert "ngram#" not in nxt and "doc_id#" not in nxt, nxt
                     break
-
 
 
 def test_hybrid_fusion_query_side_broadcast_only(spark):

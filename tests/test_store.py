@@ -115,51 +115,6 @@ def test_catalog_mutation_is_persistent_and_serialized(spark, tmp_path):
     assert len(reopened.catalog_rows("reference_tables")) == 8
 
 
-def test_compaction_merges_small_files(spark, tmp_path):
-    import json
-    import os
-
-    store = TableStore(spark, str(tmp_path / "s"))
-    for i in range(10):
-        store.append_events(
-            "raw_events",
-            [
-                {
-                    "id": new_id(),
-                    "timestamp": now_utc(),
-                    "source_path": f"/p{i}",
-                    "payload": json.dumps({"i": i}),
-                }
-            ],
-        )
-    part_dirs = [
-        d
-        for d in os.listdir(os.path.join(str(tmp_path / "s"), "raw_events"))
-        if d.startswith("event_date=")
-    ]
-    n_files_before = sum(
-        len(os.listdir(os.path.join(str(tmp_path / "s"), "raw_events", d)))
-        for d in part_dirs
-    )
-    assert n_files_before == 10
-    before = {r.source_path for r in spark.table("raw_events").collect()}
-
-    assert store.compact_events("raw_events") == len(part_dirs)
-    n_files_after = sum(
-        len(os.listdir(os.path.join(str(tmp_path / "s"), "raw_events", d)))
-        for d in part_dirs
-    )
-    assert n_files_after == len(part_dirs)  # one file per partition
-    after = {r.source_path for r in spark.table("raw_events").collect()}
-    assert after == before  # no data change
-    # appends continue to work post-compaction
-    store.append_events(
-        "raw_events",
-        [{"id": new_id(), "timestamp": now_utc(), "source_path": "/new", "payload": "{}"}],
-    )
-    assert spark.table("raw_events").count() == 11
-
-
 def test_catalog_persist_crash_window_recovers_from_old(spark, tmp_path):
     """_persist_catalog promotes via rename (old -> __old, tmp -> live);
     a crash between those renames leaves only __old — the next load must

@@ -155,76 +155,6 @@ def test_batch_throughput_smoke(gateway, spark):
     assert elapsed < 30, f"batch of 100 took {elapsed:.1f}s — vectorized path regressed"
 
 
-def test_windowed_event_counts(gateway, spark):
-    """Event-time tumbling windows over the landing stream (the streaming
-    extension the reference cannot express)."""
-    import datetime as dt
-    import json as _json
-    import os
-
-    from duckdb_webhook_gateway_spark.streaming.aggregates import (
-        run_windowed_counts_once,
-    )
-
-    sg = StreamingGateway(gateway)
-    # Hand-write envelopes with controlled event times: 3 events in minute
-    # 10:00, 2 in 10:01, on two paths.
-    stamps = [
-        ("/a", "2026-08-13T10:00:05"),
-        ("/a", "2026-08-13T10:00:30"),
-        ("/b", "2026-08-13T10:00:59"),
-        ("/a", "2026-08-13T10:01:10"),
-        ("/b", "2026-08-13T10:01:40"),
-    ]
-    for i, (path, ts) in enumerate(stamps):
-        envelope = {
-            "event_id": f"e{i}",
-            "source_path": path,
-            "payload_json": _json.dumps({"i": i}),
-            "ingest_ts": ts,
-        }
-        with open(os.path.join(sg.landing_dir, f"w{i}.json"), "w") as f:
-            f.write(_json.dumps(envelope) + "\n")
-
-    rows = run_windowed_counts_once(
-        spark, sg.landing_dir, window_duration="1 minute",
-        query_name="event_counts_test",
-    )
-    counts = {
-        (r.window_start.strftime("%H:%M"), r.source_path): r.n_events
-        for r in rows
-    }
-    assert counts[("10:00", "/a")] == 2
-    assert counts[("10:00", "/b")] == 1
-    assert counts[("10:01", "/a")] == 1
-    assert counts[("10:01", "/b")] == 1
-
-
-def test_stateful_streaming_dedup(gateway, spark, tmp_path):
-    """applyInPandasWithState dedup: state must persist across drains via
-    the checkpoint — a payload from drain 1 re-sent in drain 2 is flagged."""
-    from duckdb_webhook_gateway_spark.streaming.stateful import run_dedup_once
-
-    sg = StreamingGateway(gateway)
-    ckpt = str(tmp_path / "dedup_ckpt")
-    out = str(tmp_path / "dedup_out")
-
-    sg.ingest("/d", {"x": 1})
-    sg.ingest("/d", {"x": 1})  # in-batch duplicate
-    sg.ingest("/d", {"x": 2})
-    run_dedup_once(spark, sg.landing_dir, ckpt, out)
-
-    sg.ingest("/d", {"x": 2})  # cross-batch duplicate
-    sg.ingest("/d", {"x": 3})  # fresh
-    run_dedup_once(spark, sg.landing_dir, ckpt, out)
-
-    rows = spark.read.parquet(out).collect()
-    flags = sorted((r.content_hash, bool(r.is_duplicate)) for r in rows)
-    n_dup = sum(1 for r in rows if r.is_duplicate)
-    assert len(rows) == 5
-    assert n_dup == 2, f"expected in-batch + cross-batch dups, got {flags}"
-
-
 def test_no_payload_bearing_collect_in_micro_batch(gateway, spark, monkeypatch):
     """The micro-batch path must never collect payload bodies to the
     driver: shape fingerprints are computed executor-side, the raw-event
@@ -606,383 +536,6 @@ def test_distributed_delivery_fanout(gateway, spark):
     ).collect()
     assert len(rows) == 4
     assert all(r.success and r.response_code == 200 for r in rows)
-
-
-def test_stream_static_enrichment_join(gateway, spark):
-    """Envelopes enriched against a broadcast static dimension — the
-    stream-static join pattern (no state store, map-side probe)."""
-    import json as _json
-    import os
-
-    from duckdb_webhook_gateway_spark.streaming.enrichment import (
-        run_enriched_once,
-    )
-
-    sg = StreamingGateway(gateway)
-    for i, path in enumerate(["/a", "/a", "/b", "/c"]):
-        envelope = {
-            "event_id": f"en{i}",
-            "source_path": path,
-            "payload_json": _json.dumps({"i": i}),
-            "ingest_ts": "2026-08-13T10:00:05",
-        }
-        with open(os.path.join(sg.landing_dir, f"en{i}.json"), "w") as f:
-            f.write(_json.dumps(envelope) + "\n")
-
-    dim = spark.createDataFrame(
-        [("/a", "alpha", 1), ("/b", "beta", 2)],
-        ["source_path", "team", "priority"],
-    )
-    rows = run_enriched_once(
-        spark, sg.landing_dir, dim, query_name="enriched_test"
-    )
-    by_event = {r.event_id: (r.team, r.priority) for r in rows}
-    assert len(rows) == 4
-    assert by_event["en0"] == ("alpha", 1)
-    assert by_event["en2"] == ("beta", 2)
-    assert by_event["en3"] == (None, None)  # left join keeps unmatched
-
-
-def test_streaming_session_windows(gateway, spark):
-    """Gap-based session windows: two bursts 2 minutes apart on one path
-    must land in two sessions; the second path sessionizes independently."""
-    import json as _json
-    import os
-
-    from duckdb_webhook_gateway_spark.streaming.enrichment import (
-        run_session_windows_once,
-    )
-
-    sg = StreamingGateway(gateway)
-    stamps = [
-        ("/a", "2026-08-13T10:00:00"),
-        ("/a", "2026-08-13T10:00:10"),  # same session (10s gap < 30s)
-        ("/a", "2026-08-13T10:02:30"),  # new session (140s gap)
-        ("/b", "2026-08-13T10:00:05"),
-    ]
-    for i, (path, ts) in enumerate(stamps):
-        envelope = {
-            "event_id": f"s{i}",
-            "source_path": path,
-            "payload_json": _json.dumps({"i": i}),
-            "ingest_ts": ts,
-        }
-        with open(os.path.join(sg.landing_dir, f"s{i}.json"), "w") as f:
-            f.write(_json.dumps(envelope) + "\n")
-
-    rows = run_session_windows_once(
-        spark, sg.landing_dir, gap="30 seconds",
-        query_name="session_counts_test",
-    )
-    sessions = sorted(
-        (r.source_path, r.session_start.strftime("%H:%M:%S"), r.n_events)
-        for r in rows
-    )
-    assert sessions == [
-        ("/a", "10:00:00", 2),
-        ("/a", "10:02:30", 1),
-        ("/b", "10:00:05", 1),
-    ]
-
-
-def test_stream_stream_interval_join(gateway, spark, tmp_path):
-    """Stream-stream interval join: receipts match their envelope only
-    within max_lag of ingest; both sides watermarked so join state is
-    bounded.  The out-of-window receipt and the receipt-less envelope
-    must not produce rows."""
-    import json as _json
-    import os
-
-    from duckdb_webhook_gateway_spark.streaming.joins import (
-        run_ingest_receipt_join_once,
-    )
-
-    sg = StreamingGateway(gateway)
-    receipt_dir = str(tmp_path / "receipts")
-    os.makedirs(receipt_dir)
-    envelopes = [
-        ("e0", "2026-08-13T10:00:00"),  # receipt 30 s later -> match
-        ("e1", "2026-08-13T10:00:00"),  # receipt 20 min later -> no match
-        ("e2", "2026-08-13T10:00:00"),  # no receipt at all
-    ]
-    for i, (eid, ts) in enumerate(envelopes):
-        env = {
-            "event_id": eid,
-            "source_path": "/a",
-            "payload_json": _json.dumps({"i": i}),
-            "ingest_ts": ts,
-        }
-        with open(os.path.join(sg.landing_dir, f"j{i}.json"), "w") as f:
-            f.write(_json.dumps(env) + "\n")
-    receipts = [
-        ("e0", 200, "2026-08-13T10:00:30"),
-        ("e1", 200, "2026-08-13T10:20:00"),
-        ("e9", 404, "2026-08-13T10:00:10"),  # receipt for unknown event
-    ]
-    for i, (eid, code, ts) in enumerate(receipts):
-        with open(os.path.join(receipt_dir, f"r{i}.json"), "w") as f:
-            f.write(
-                _json.dumps(
-                    {"event_id": eid, "status_code": code, "receipt_ts": ts}
-                )
-                + "\n"
-            )
-
-    rows = run_ingest_receipt_join_once(
-        spark, sg.landing_dir, receipt_dir, max_lag="10 minutes",
-        query_name="ingest_receipts_test",
-    )
-    assert [(r.event_id, r.status_code, r.delivery_lag_us) for r in rows] == [
-        ("e0", 200, 30_000_000.0)
-    ]
-
-
-def test_stateful_streaming_sessionization(spark, tmp_path):
-    """Gap-closed sessions emit as later events arrive; the open tail
-    rides the checkpointed state across drains (restart-safe)."""
-    import json as _json
-
-    from duckdb_webhook_gateway_spark.streaming.stateful import (
-        run_sessions_once,
-    )
-
-    events_dir = tmp_path / "events_in"
-    events_dir.mkdir()
-    ckpt = str(tmp_path / "ckpt")
-    out = str(tmp_path / "sessions.parquet")
-
-    def drop(name, rows):
-        with open(events_dir / name, "w") as f:
-            for eid, ts, uid, val in rows:
-                f.write(_json.dumps(
-                    {"event_id": eid, "ts": ts, "user_id": uid, "value": val}
-                ) + "\n")
-
-    t = "2026-01-01T10:{m:02d}:00"
-    drop("b1.json", [
-        (1, t.format(m=0), 1, 1.0),
-        (2, t.format(m=10), 1, 2.0),   # same session (gap 10 min)
-        (3, "2026-01-01T11:00:00", 1, 4.0),  # 50-min gap -> closes s1
-        (4, t.format(m=5), 2, 8.0),    # user 2, stays open
-    ])
-    run_sessions_once(spark, str(events_dir), ckpt, out)
-    got = spark.read.parquet(out).collect()
-    assert len(got) == 1  # only user 1's first session has closed
-    s1 = got[0]
-    assert s1.user_id == 1 and s1.n_events == 2 and s1.sum_value == 3.0
-    assert s1.session_start.minute == 0 and s1.session_end.minute == 10
-
-    drop("b2.json", [
-        (5, "2026-01-01T13:00:00", 1, 0.5),   # closes user 1's second session
-        (6, "2026-01-01T14:00:00", 2, 0.25),  # closes user 2's first session
-    ])
-    run_sessions_once(spark, str(events_dir), ckpt, out)
-    rows = {(r.user_id, r.n_events, r.sum_value)
-            for r in spark.read.parquet(out).collect()}
-    assert rows == {
-        (1, 2, 3.0),   # drain-1 emission, still present (append sink)
-        (1, 1, 4.0),   # user 1 session 2, closed by event 5
-        (2, 1, 8.0),   # user 2 session 1, closed by event 6
-    }
-
-
-def test_streaming_heavy_hitters_superset_across_batches(spark):
-    """MG counters must survive micro-batch boundaries via the state
-    store: after draining a multi-batch replay, every item whose TOTAL
-    frequency exceeds n_group/k appears in the final summary."""
-    from collections import Counter
-
-    import pyspark.sql.functions as F
-
-    from duckdb_webhook_gateway_spark.streaming.stateful import (
-        run_heavy_hitters_once,
-    )
-
-    rows = []
-    for g in ("a", "b"):
-        for i in range(30):
-            rows.extend([(g, f"{g}{i:02d}")] * (300 // (i + 1)))
-    items = spark.createDataFrame(rows, "grp string, item string")
-    k = 8
-    got = {
-        (r["grp"], r["item"])
-        for r in run_heavy_hitters_once(spark, items, k=k, n_files=5).collect()
-    }
-    for g in ("a", "b"):
-        grp_items = [i for gg, i in rows if gg == g]
-        n = len(grp_items)
-        exact = {i for i, c in Counter(grp_items).items() if c * k > n}
-        assert {(g, i) for i in exact} <= got, (g, exact, got)
-    # bounded summary: at most k items per group survive
-    for g in ("a", "b"):
-        assert sum(1 for gg, _ in got if gg == g) <= k
-
-
-def test_dedup_within_watermark_bounded_state(spark, tmp_path):
-    """dropDuplicatesWithinWatermark: duplicates inside the delay window
-    drop; after the watermark passes a key's event time + delay, its
-    state evicts and a later re-send is treated as NEW — the bounded-state
-    trade documented in streaming/stateful.py."""
-    import json as _json
-    import os
-
-    from duckdb_webhook_gateway_spark.streaming.stateful import (
-        dedup_within_watermark_stream,
-    )
-
-    landing = tmp_path / "wm_in"
-    landing.mkdir()
-    ckpt = str(tmp_path / "wm_ckpt")
-    out = str(tmp_path / "wm_out")
-
-    def drain(rows, n):
-        p = landing / f"f{n}.json"
-        p.write_text(
-            "\n".join(
-                _json.dumps({"k": k, "ts": ts}) for k, ts in rows
-            )
-        )
-        stream = spark.readStream.schema("k string, ts timestamp").json(
-            str(landing)
-        )
-        q = (
-            dedup_within_watermark_stream(stream, ["k"], "ts", "1 hour")
-            .writeStream.format("parquet")
-            .option("path", out)
-            .option("checkpointLocation", ckpt)
-            .outputMode("append")
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    # drain 1: A twice within the window (1 emitted) + a sentinel 3h later
-    # that pushes the watermark past A's eviction horizon
-    drain(
-        [
-            ("A", "2026-01-01 10:00:00"),
-            ("A", "2026-01-01 10:05:00"),
-            ("B", "2026-01-01 13:00:00"),
-        ],
-        1,
-    )
-    # drain 2: A re-sent with a fresh event time — state evicted, so NEW
-    drain([("A", "2026-01-01 13:30:00")], 2)
-
-    rows = spark.read.parquet(out).collect()
-    ks = sorted(r.k for r in rows)
-    assert ks == ["A", "A", "B"], ks
-
-
-def test_stream_stream_outer_join_emits_lost_after_watermark(spark, tmp_path):
-    """LEFT OUTER interval join: a matched envelope emits immediately; a
-    receipt-less envelope emits with NULL receipt columns only after the
-    watermark passes ingest_ts + max_lag (drain 2's later data advances
-    it) — the 'declare the delivery lost' semantics."""
-    import json as _json
-    import os
-
-    from duckdb_webhook_gateway_spark.streaming.joins import (
-        ingest_receipt_join_outer,
-    )
-
-    landing = str(tmp_path / "env")
-    receipts = str(tmp_path / "rec")
-    ckpt = str(tmp_path / "ckpt")
-    out_dir = str(tmp_path / "out")
-    os.makedirs(landing)
-    os.makedirs(receipts)
-
-    def write(d, name, rows):
-        with open(os.path.join(d, name), "w") as f:
-            f.write("\n".join(_json.dumps(r) for r in rows))
-
-    def drain():
-        df = ingest_receipt_join_outer(
-            spark, landing, receipts, max_lag="10 minutes",
-            watermark="1 minute",
-        )
-        q = (
-            df.writeStream.outputMode("append")
-            .format("parquet")
-            .option("path", out_dir)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
-        )
-        q.awaitTermination()
-
-    write(landing, "e.json", [
-        {"event_id": "ok", "source_path": "/a",
-         "payload_json": "{}", "ingest_ts": "2026-08-13T10:00:00"},
-        {"event_id": "lost", "source_path": "/a",
-         "payload_json": "{}", "ingest_ts": "2026-08-13T10:00:00"},
-    ])
-    write(receipts, "r.json", [
-        {"event_id": "ok", "status_code": 200,
-         "receipt_ts": "2026-08-13T10:00:30"},
-    ])
-    drain()
-    got1 = {r.event_id: r.status_code for r in spark.read.parquet(out_dir).collect()}
-    assert got1.get("ok") == 200
-    assert "lost" not in got1  # watermark hasn't passed the lag horizon yet
-
-    # later traffic on BOTH streams advances both watermarks past
-    # 10:00 + 10 min; the unmatched envelope must now emit with NULLs
-    write(landing, "e2.json", [
-        {"event_id": "late", "source_path": "/a",
-         "payload_json": "{}", "ingest_ts": "2026-08-13T11:00:00"},
-    ])
-    write(receipts, "r2.json", [
-        {"event_id": "late", "status_code": 200,
-         "receipt_ts": "2026-08-13T11:00:01"},
-    ])
-    drain()
-    rows = {r.event_id: r for r in spark.read.parquet(out_dir).collect()}
-    assert "lost" in rows, sorted(rows)
-    assert rows["lost"].status_code is None
-    assert rows["lost"].delivery_lag_us is None
-
-
-def test_session_group_sorts_across_chunks():
-    """_session_group must sort the WHOLE micro-batch, not each Arrow
-    chunk: a later chunk carrying earlier events would otherwise fold
-    out of order and merge across a genuine gap."""
-    import pandas as pd
-
-    from duckdb_webhook_gateway_spark.streaming.stateful import _session_group
-
-    class _State:
-        exists = False
-        hasTimedOut = False
-
-        def update(self, v):
-            self.exists = True
-            self.val = v
-
-        @property
-        def get(self):
-            return self.val
-
-    def ev(ts_iso, eid, val=1.0):
-        return {"event_id": eid, "ts": pd.Timestamp(ts_iso),
-                "user_id": 1, "value": val}
-
-    # chunk 1 holds the LATEST event; chunks 2 carries two earlier ones
-    # separated from it by >30 min — correct folding yields ONE closed
-    # session (the early pair) and parks the late event
-    chunk1 = pd.DataFrame([ev("2026-01-01 12:00:00", 3)])
-    chunk2 = pd.DataFrame(
-        [ev("2026-01-01 10:00:00", 1), ev("2026-01-01 10:10:00", 2)]
-    )
-    st = _State()
-    out = list(_session_group((1,), iter([chunk1, chunk2]), st))
-    assert len(out) == 1 and len(out[0]) == 1
-    closed = out[0].iloc[0]
-    assert closed["n_events"] == 2
-    assert str(closed["session_end"]).startswith("2026-01-01 10:10")
-    # open tail = the 12:00 event
-    assert st.val[2] == 1
 
 
 def test_replay_user_sessions_boundary_and_micro_precision(spark):
